@@ -3,6 +3,7 @@ semantics from spark/transform_load.py, per SURVEY.md §5.2)."""
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from tfl_bikes_data_pipeline_spark.plans.dim_time import build_dim_time
@@ -81,3 +82,109 @@ def test_null_accounting_left_join_tolerance(spark, sf_dir):
 
     out = p_weather_ids(spark, sf_dir)
     assert out.count() == load_table(spark, sf_dir, "events").count()
+
+
+#: events with NULL user_id and NULL ts rows in every aligned event type,
+#: a view-only day, a NULL event_type and NULL values
+_NULL_KEY_EVENTS = """
+    SELECT event_id::BIGINT AS event_id, ts::TIMESTAMP AS ts,
+           user_id::BIGINT AS user_id, event_type, value::DOUBLE AS value
+    FROM (VALUES
+        (1, '2024-01-01 10:00:00', 1, 'click', 1.5),
+        (2, '2024-01-01 11:00:00', 1, 'view', 2.25),
+        (3, '2024-01-01 12:00:00', 1, 'purchase', 3.0),
+        (4, '2024-01-01 23:30:00', 1, 'click', NULL),
+        (5, '2024-01-02 09:00:00', 1, 'view', 4.0),
+        (6, '2024-01-02 00:30:00', 2, 'click', 5.0),
+        (7, '2024-01-02 00:45:00', 2, 'purchase', NULL),
+        (8, '2024-01-01 08:00:00', NULL, 'click', 6.0),
+        (9, '2024-01-01 09:00:00', NULL, 'view', 7.0),
+        (10, '2024-01-01 10:00:00', NULL, 'purchase', 8.0),
+        (11, NULL, 3, 'click', 9.0),
+        (12, NULL, 3, 'view', 10.0),
+        (13, NULL, 3, 'purchase', 11.0),
+        (14, NULL, NULL, 'click', 12.0),
+        (15, NULL, NULL, 'view', 13.0),
+        (16, '2024-01-01 13:00:00', 1, NULL, 14.0),
+        (17, '2024-01-03 13:00:00', 4, 'view', 1.0)
+    ) t(event_id, ts, user_id, event_type, value)
+"""
+
+
+@pytest.mark.parametrize("name", ["p_weather_align", "p_weather_ids", "q_profile_nulls"])
+def test_aligned_weather_null_keys_match_oracle(spark, tmp_path, name):
+    """NULL keys never match in the oracle's left joins, so a NULL-keyed
+    click group carries no view/purchase sums even where same-keyed
+    view/purchase rows exist."""
+    import duckdb
+
+    from tfl_bikes_data_pipeline_spark import registry
+
+    from .oracle_utils import assert_matches_oracle
+
+    con = duckdb.connect()
+    path = tmp_path / "events.parquet"
+    con.execute(f"COPY ({_NULL_KEY_EVENTS}) TO '{path}' (FORMAT PARQUET)")
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+    df = registry.QUERIES[name](spark, str(tmp_path))
+    assert_matches_oracle(df, con, registry.ORACLES[name], name)
+
+
+def test_events_load_applies_no_filter(spark, sf_dir):
+    """p_incremental_append trusts the footer row count and supplies the
+    source schema to its read-back; both hold only while the events
+    load is an unfiltered scan."""
+    from tfl_bikes_data_pipeline_spark.tables import load_table
+
+    plan = load_table(spark, sf_dir, "events")._jdf.queryExecution().analyzed().toString()
+    assert "Filter" not in plan, plan
+
+
+def test_events_footer_row_count_matches_scan(spark, sf_dir):
+    from tfl_bikes_data_pipeline_spark.tables import load_table, table_row_count
+
+    assert table_row_count(sf_dir, "events") == load_table(spark, sf_dir, "events").count()
+
+
+def test_warehouse_read_back_schema_matches_inferred(spark, sf_dir, tmp_path):
+    from tfl_bikes_data_pipeline_spark.tables import load_table
+
+    events = load_table(spark, sf_dir, "events").withColumn("ym", month_partition("ts"))
+    out = str(tmp_path / "warehouse")
+    write_partitioned(events, out, ["ym"], mode="overwrite")
+    inferred = spark.read.parquet(out).schema
+    supplied = spark.read.schema(events.schema).parquet(out).schema
+    assert [(f.name, f.dataType) for f in supplied] == [
+        (f.name, f.dataType) for f in inferred
+    ]
+
+
+def test_scan_split_estimate_on_many_small_files(spark, tmp_path):
+    """Many small files: the estimate is ceil(total / maxPartitionBytes),
+    a lower bound on Spark's split count, not one split per file."""
+    import math
+    import os
+
+    from tfl_bikes_data_pipeline_spark.tables import (
+        ensure_scan_parallelism,
+        scan_split_estimate,
+    )
+
+    out = str(tmp_path / "small")
+    spark.range(64).repartition(16).write.parquet(out)
+    df = spark.read.parquet(out)
+    files = [f for f in os.listdir(out) if f.endswith(".parquet")]
+    assert len(files) == 16
+    total = sum(os.path.getsize(os.path.join(out, f)) for f in files)
+
+    assert scan_split_estimate(df, spark) == 1
+    assert scan_split_estimate(df, spark) <= df.rdd.getNumPartitions()
+    assert ensure_scan_parallelism(df, spark) is not df  # widened
+
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "256b")
+    try:
+        assert scan_split_estimate(df, spark) == math.ceil(total / 256)
+    finally:
+        spark.conf.set(key, prev)

@@ -506,3 +506,60 @@ def test_tpch_forecast_revenue_pushes_all_predicates(spark, sf_dir):
     pushed = [l for l in plan.splitlines() if "PushedFilters" in l][0]
     for col in ("l_shipdate", "l_discount", "l_quantity"):
         assert col in pushed, f"{col} predicate not pushed to scan: {pushed}"
+
+
+def test_weather_align_single_scan_single_exchange(spark, sf_dir):
+    """The three per-type daily sums share one grouping key, so the
+    aligned dimension is one conditional aggregate: events scanned once
+    and hash-shuffled once (the three-aggregate left-join form reads
+    the fact 3× and shuffles per side)."""
+    import re
+
+    from tfl_bikes_data_pipeline_spark.plans.pipelines import p_weather_align
+
+    plan = p_weather_align(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    n_scans = len(re.findall(r"FileScan parquet", plan))
+    n_hash_exchange = len(re.findall(r"Exchange hashpartitioning", plan))
+    assert n_scans == 1, f"weather alignment scans events {n_scans}× (want 1)"
+    assert n_hash_exchange == 1, (
+        f"weather alignment hash-shuffles {n_hash_exchange}× (want 1)"
+    )
+
+
+def test_weather_ids_has_no_event_id_shuffle(spark, sf_dir):
+    """Start and end ids are chained left joins onto the fact; no
+    re-merge of two enriched copies on event_id. Broadcast is off so the
+    plan takes its at-scale (shuffled) shape."""
+    import re
+
+    from tfl_bikes_data_pipeline_spark.plans.pipelines import p_weather_ids
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan = p_weather_ids(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, prev)
+    assert "SortMergeJoin" in plan  # the at-scale shape was planned
+    assert not re.search(r"Exchange hashpartitioning\(event_id#", plan), (
+        "weather ids re-shuffle the fact on event_id"
+    )
+
+
+def test_incremental_append_build_runs_only_its_writes(spark, sf_dir):
+    """Building p_incremental_append launches exactly the two warehouse
+    writes (load, re-run of the latest month): no pre-write scan and no
+    schema-inference job on the read-back."""
+    from tfl_bikes_data_pipeline_spark.plans.pipelines import p_incremental_append
+
+    load_table(spark, sf_dir, "events")  # schema catalog warm before the count
+    sc = spark.sparkContext
+    sc.setJobGroup("append_build", "incremental append plan construction")
+    try:
+        p_incremental_append(spark, sf_dir)
+        jobs = sc.statusTracker().getJobIdsForGroup("append_build")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs) == 2, f"append build launched {len(jobs)} jobs {jobs} (want 2)"

@@ -73,11 +73,11 @@ def synth_key(*cols: str | Column) -> Column:
     return F.concat_ws("_", *cs)
 
 
-def calendar_columns(ts_col: str = "timestamp") -> dict[str, Column]:
+def calendar_columns(ts_col: str | Column = "timestamp") -> dict[str, Column]:
     """The reference's calendar breakdown of ``dim_timestamp``
     (``spark/transform_load.py:115-120``): year, month, dayofmonth,
     ISO weekofyear, hour, minute — all int."""
-    c = F.col(ts_col)
+    c = F.col(ts_col) if isinstance(ts_col, str) else ts_col
     return {
         "year": F.year(c).cast("int"),
         "month": F.month(c).cast("int"),

@@ -42,11 +42,11 @@ def build_dim_time(
     """
     start_s, end_s = _epoch(start), _epoch(end)
     n = (end_s - start_s) // step_seconds + 1
-    df = (
-        spark.range(n)
-        .select((F.lit(start_s) + F.col("id") * step_seconds).cast("int").alias("id"))
-        .withColumn("timestamp", F.timestamp_seconds(F.col("id")))
+    # one projection: each withColumn re-analyzes the whole plan
+    epoch = (F.lit(start_s) + F.col("id") * step_seconds).cast("int")
+    ts = F.timestamp_seconds(epoch)
+    return spark.range(n).select(
+        epoch.alias("id"),
+        ts.alias("timestamp"),
+        *(col.alias(name) for name, col in calendar_columns(ts).items()),
     )
-    for name, col in calendar_columns("timestamp").items():
-        df = df.withColumn(name, col)
-    return df

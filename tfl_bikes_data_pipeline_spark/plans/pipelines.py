@@ -88,36 +88,42 @@ def p_fact_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 # p_weather_align — per-variable tables aligned into one dimension
 # (reference transform_load.py:240-292: rainfall ⟕ tasmin ⟕ tasmax on
 # (location_id, time), synthetic "{loc}_{unixts}" key). Metrics here are
-# per-event-type daily sums per user. The join keys are identical across
-# the three sides → a single shuffle partitioning is reused for both
-# joins (no broadcast needed; at scale all three sides are large).
+# per-event-type daily sums per user. The three per-type tables share
+# their grouping key, so one conditional aggregate over one scan and one
+# shuffle replaces the two left joins of three separate aggregates.
 # ---------------------------------------------------------------------------
 
-def _daily_metric(events: DataFrame, event_type: str, alias: str) -> DataFrame:
-    return (
-        events.where(F.col("event_type") == event_type)
-        .groupBy("user_id", F.to_date("ts").alias("day"))
-        .agg(exact_sum("value", alias))
-    )
+_ALIGNED_TYPES = ("click", "view", "purchase")
 
 
 def build_aligned_weather(events: DataFrame) -> DataFrame:
-    click = _daily_metric(events, "click", "click_value")
-    view = _daily_metric(events, "view", "view_value")
-    purchase = _daily_metric(events, "purchase", "purchase_value")
-    aligned = click.join(view, ["user_id", "day"], "left").join(
-        purchase, ["user_id", "day"], "left"
+    kind = F.col("event_type")
+    daily = (
+        events.where(kind.isin(*_ALIGNED_TYPES))
+        .groupBy("user_id", F.to_date("ts").alias("day"))
+        .agg(
+            F.count(F.when(kind == "click", 1)).alias("n_click"),
+            *(
+                exact_sum(F.when(kind == t, F.col("value")), f"{t}_value")
+                for t in _ALIGNED_TYPES
+            ),
+        )
+        # the click table drives the left joins: only its groups survive
+        .where(F.col("n_click") > 0)
     )
+    # a NULL join key never matches, so a NULL-keyed click group had no
+    # view/purchase partner in the joined form
+    keyed = F.col("user_id").isNotNull() & F.col("day").isNotNull()
     day_epoch = epoch_id(F.col("day").cast("timestamp"))
-    return aligned.select(
+    return daily.select(
         synth_key(F.col("user_id"), day_epoch).alias("id"),
         "user_id",
         # day kept as midnight timestamp (not DATE) so the oracle value
         # comparison is representation-stable across engines.
         F.col("day").cast("timestamp").alias("day"),
         "click_value",
-        "view_value",
-        "purchase_value",
+        F.when(keyed, F.col("view_value")).alias("view_value"),
+        F.when(keyed, F.col("purchase_value")).alias("purchase_value"),
     )
 
 
@@ -126,60 +132,50 @@ def p_weather_align(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# p_weather_ids — calendar-grain enrichment of the fact, both sides, then
-# re-merge (reference transform_load.py:295-400: J2-J5 choreography).
-# Idiomatic rewrite: instead of the reference's year/month/dayofmonth
-# triple join key we join once per side on (to_date(ts), user) — same
-# semantics, one equi-join key, LEFT to tolerate missing observations
-# (docs/3_data_transformation.md:32). The J5 re-merge on event_id is kept
-# to preserve the declared operator shape.
+# p_weather_ids — calendar-grain enrichment of the fact with start and
+# end observation ids (reference transform_load.py:295-400). Each side
+# joins once on (user, DATE) instead of the reference's year/month/
+# dayofmonth triple key, LEFT to tolerate missing observations
+# (docs/3_data_transformation.md:32). The two joins are chained onto the
+# fact, because the reference's J5 re-merge of two enriched copies on
+# event_id re-shuffles the whole fact for the same rows.
 # ---------------------------------------------------------------------------
 
 def p_weather_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    # project the dim's midnight timestamp to DATE up front: both join
-    # sides then compare DATE == DATE (engine.py does the same), instead
-    # of leaning on implicit DATE→TIMESTAMP coercion plus the
-    # exact-midnight invariant — a silent all-NULL join if the dim's
-    # day representation ever changes (review r5).
-    dim = build_aligned_weather(events).select(
-        "id", "user_id", F.to_date("day").alias("day")
+    # the aligned dimension's rows are exactly the click days and only
+    # its id is joined, so its view and purchase sums are never computed.
+    # Both joins read this one projection: identical build sides let the
+    # second join reuse the first one's exchange. DATE == DATE on both
+    # sides, as in engine.py.
+    days = (
+        events.where(F.col("event_type") == "click")
+        .select(F.col("user_id").alias("w_user"), F.to_date("ts").alias("w_day"))
+        .distinct()
     )
-
+    weather = days.select(
+        "w_user",
+        "w_day",
+        synth_key(F.col("w_user"), epoch_id(F.col("w_day").cast("timestamp"))).alias("w_id"),
+    )
     fact = events.select(
         "event_id",
         "user_id",
         "ts",
         (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("end_ts"),
     )
-
-    start_side = fact.join(
-        dim.select(
-            F.col("user_id").alias("w_user"),
-            F.col("day").alias("w_day"),
-            F.col("id").alias("start_weather_id"),
-        ),
-        (F.col("user_id") == F.col("w_user")) & (F.to_date("ts") == F.col("w_day")),
-        "left",
-    ).select("event_id", "user_id", "ts", "end_ts", "start_weather_id")
-
-    end_side = fact.join(
-        dim.select(
-            F.col("user_id").alias("w_user"),
-            F.col("day").alias("w_day"),
-            F.col("id").alias("end_weather_id"),
-        ),
-        (F.col("user_id") == F.col("w_user")) & (F.to_date("end_ts") == F.col("w_day")),
-        "left",
-    ).select(F.col("event_id").alias("end_event_id"), "end_weather_id")
-
-    # J5 re-merge on the fact key, drop the duplicate key column
-    # (transform_load.py:393-398).
-    return (
-        start_side.join(end_side, F.col("event_id") == F.col("end_event_id"), "left")
-        .drop("end_event_id")
-        .select("event_id", "start_weather_id", "end_weather_id")
-    )
+    for side, ts_col in (("start", "ts"), ("end", "end_ts")):
+        fact = (
+            fact.join(
+                weather,
+                (F.col("user_id") == F.col("w_user"))
+                & (F.to_date(ts_col) == F.col("w_day")),
+                "left",
+            )
+            .drop("w_user", "w_day")
+            .withColumnRenamed("w_id", f"{side}_weather_id")
+        )
+    return fact.select("event_id", "start_weather_id", "end_weather_id")
 
 
 # ---------------------------------------------------------------------------
@@ -209,17 +205,12 @@ def p_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     # accumulate full table copies in /tmp.
     atexit.register(shutil.rmtree, out, ignore_errors=True)
 
-    # r14 (guide §1.2 "don't compute things you throw away"): the
-    # empty-source check reads the parquet FOOTER row count (the
-    # catalog stat every warehouse serves) and the latest month comes
-    # from the WRITTEN partition directory names below — together they
-    # replace a full pre-write scan (count + max(ym) aggregate) whose
-    # only purpose was those two scalars. At 100 TB that aggregate is
-    # an extra corpus pass before the write.
+    # the empty-source check reads the parquet footer row count and the
+    # latest month comes from the written partition directory names, so
+    # no pre-write scan computes those two scalars.
     if table_row_count(sf_dir, "events") == 0:
-        # truly empty source: nothing was written (no partitions, so
-        # the read-back cannot infer a schema) — the correct result is
-        # the empty aggregate over the (empty) input relation itself.
+        # truly empty source: nothing is written, so the result is the
+        # empty aggregate over the (empty) input relation itself.
         return events.groupBy("ym").agg(F.count(F.lit(1)).alias("cnt")).orderBy("ym")
     write_partitioned(events, out, ["ym"], mode="overwrite")
     # partition inventory from the directory layout ("ym=yyyyMM" dirs;
@@ -233,22 +224,16 @@ def p_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         and e.name.startswith("ym=")
         and "__HIVE_DEFAULT_PARTITION__" not in e.name
     )
-    last_month = months[-1] if months else None
-    if last_month is None:
-        # rows exist but every ym is NULL: the write above landed them
-        # all in the default partition; there is no latest month to
-        # re-run, so fall through to the read-back inventory.
-        back = spark.read.parquet(out)
-        return (
-            back.groupBy("ym")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .orderBy("ym")
+    if months:
+        # idempotent re-run of the latest month: dynamic overwrite
+        # replaces only that partition. (With every ym NULL there is no
+        # latest month to re-run.)
+        write_partitioned(
+            events.where(F.col("ym") == months[-1]), out, ["ym"], mode="overwrite"
         )
-    # idempotent re-run of the latest month: dynamic overwrite replaces
-    # only that partition.
-    write_partitioned(events.where(F.col("ym") == last_month), out, ["ym"], mode="overwrite")
-
-    back = spark.read.parquet(out)
+    # the written schema is the source's (ym a string, as partition type
+    # inference is off), so supplying it skips the footer-inference job
+    back = spark.read.schema(events.schema).parquet(out)
     return (
         back.groupBy("ym")
         .agg(F.count(F.lit(1)).alias("cnt"))

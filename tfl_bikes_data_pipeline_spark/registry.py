@@ -126,51 +126,36 @@ _load_all()
 BENCH_QUERIES[:] = list(dict.fromkeys([*BENCH_QUERIES, *QUERIES]))
 
 
-#: Registry HEAD — the driver pins the FIRST ~50 entries of
-#: ``queries()`` each round. The r11 rotation CLOSED the
-#: never-driver-checked backlog, so the head pins by STALENESS
-#: (verdict r11 task 2): new-this-round queries first (introduction-
-#: round pin — the invariant that nothing hash-oracled ships
-#: driver-unchecked; r13 introduces none), then every remaining query
-#: ordered by the round of its most recent driver-green CORRECTNESS
-#: row, oldest first. This tuple is the VERBATIM output of
-#: ``python tools/gen_head.py`` over the committed
-#: CORRECTNESS_r01–r13 artifacts (tests/test_registry_contract.py
-#: asserts the match, so a stale paste fails CI rather than silently
-#: freezing coverage — verdict r12 task 2). r14 head: the 10
-#: retrieval/streaming queries whose last green row is r9 (the tail
-#: the r13 50-slot pin didn't reach), then the r10 profile/timeseries/
-#: merge/training/graph cohort. Every name here must carry a full hash
-#: oracle (the two bound-oracled q_approx_* sketches are excluded by
-#: construction; their error contracts ride the hash-oracled
-#: q_approx_*_gate twins, driver-green r12).
+#: Registry HEAD — the external hash check of ``queries()`` pins its
+#: FIRST ~50 entries each round: never-checked hash-oracled queries
+#: first, then every remaining query ordered by the round of its most
+#: recent green CORRECTNESS row, oldest first (ties keep registry
+#: order). This tuple is the verbatim output of ``python
+#: tools/gen_head.py`` over the committed CORRECTNESS_r*.json artifacts;
+#: tests/test_registry_contract.py asserts the match, so a stale paste
+#: fails CI. Every name here carries a full hash oracle (bound-oracled
+#: sketches are excluded by construction).
 REGISTRY_HEAD: tuple[str, ...] = (
-    # 1) last driver-green r9: the retrieval/eval/streaming tail that
-    #    overflowed the r13 50-slot pin
-    "q_bm25_topk", "q_hybrid_rrf", "q_rbo_eval",
-    "q_decontaminate", "q_split_leakage_safe", "q_dsir_weights",
-    "q_stream_tumbling", "q_stream_dedup",
-    "q_session_window", "q_stream_stateful_counts",
-    # 2) last driver-green r10: profile/quality, asof/range/sampling,
-    #    timeseries, merge/SCD, fuzzy/entity, training mix, graph —
-    #    registration order within the round (gen_head preserves
-    #    registry order for ties)
-    "q_cdc_chunks",
-    "q_multimodal_meta", "q_multimodal_framesample",
-    "q_multimodal_phash_pairs", "q_multimodal_dedup_canonical",
-    "q_profile_nulls", "q_minmax_bounds", "q_stats_moments",
-    "q_winsorized_means", "q_drift_psi", "q_bloom_filter_probe",
-    "q_cms_counts", "q_dq_audit", "q_table_stats", "q_mad_outliers",
-    "q_quality_model", "q_source_overlap",
-    "q_asof_join", "q_range_join", "q_sample_hash",
-    "q_sample_stratified", "q_gap_fill", "q_histogram",
-    "q_ts_similarity", "q_ewma", "q_anomaly_zscore",
-    "q_rolling_actives",
-    "q_merge_upsert", "q_incremental_agg", "q_snapshot_diff",
-    "q_latest_snapshot", "q_scd2_history", "q_scd2_point_lookup",
-    "q_fuzzy_pairs", "q_entity_resolution",
-    "q_split_assign", "q_mixture_sample", "q_mixture_plan",
-    "q_pack_sequences", "q_sample_weighted",
+    # 1) last green r10: the training/curation, graph and layout tail
+    "q_training_examples", "q_curation_pipeline", "q_source_caps",
+    "q_budget_select", "q_adaptive_filter", "q_graph_degrees",
+    "q_graph_triangles", "q_zorder_layout",
+    # 2) last green r11: analyst, retrieval, text, multimodal, sources,
+    #    sketch and skew queries, in registration order
+    "q_topk_count", "q_topk_join_count", "q_filter_hour_topk",
+    "q_group_by_hour", "q_moving_avg", "q_case_bucket_count",
+    "q_bucket_by_location", "q_join_cte_inner", "q_star_view",
+    "q_quantiles_scaleout", "q_dedup_hyperplane_lsh", "q_knn_classify_ivf",
+    "q_embed_pca_project", "q_token_count", "q_pii_scrub",
+    "q_text_bigram_quality", "q_text_repetition", "q_text_chunks",
+    "q_corpus_report", "q_text_boilerplate", "q_textrank_keywords",
+    "q_bpe_merges", "q_vocab_growth", "q_ahash_bucket_profile",
+    "q_image_stats", "q_audio_stats", "q_image_resize", "q_audio_resample",
+    "q_media_decode_quarantine", "q_cms_join_estimate", "q_sessionize",
+    "q_split_leakproof", "q_mixture_temperature", "q_csv_roundtrip",
+    "q_orc_roundtrip", "q_json_roundtrip", "q_spatial_nearest",
+    "q_netcdf_weather", "q_xlsx_roundtrip", "q_xml_stations",
+    "q_skew_salted_join", "q_stream_tumbling_warehouse",
 )
 
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -172,52 +173,50 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def ensure_scan_parallelism(df: DataFrame, spark: SparkSession) -> DataFrame:
-    """Round-robin repartition ONLY when the scan yields fewer splits
-    than half the scheduler's slots — the local-fixture case (one small
-    parquet file = one split = one core doing all the narrow per-row
-    work). On any real deployment the scan has ≥ thousands of splits
-    and this returns ``df`` unchanged, so no full-corpus shuffle is
-    baked into production plans. Shared by the dedup shingle paths
-    (since r9) and, as of the r13 optimization round, the embedding/ANN
-    scoring paths, whose broadcast nested-loop scoring otherwise runs
-    single-task over the one-split embeddings fixture (profiled:
-    1-2-task stages carrying 1-3 s of per-row vector math).
-
-    The split-count probe reads the scan's FILE LISTING (r14):
-    ``df.rdd.getNumPartitions()`` runs full physical planning + RDD
-    conversion on the driver and measured 40-95 ms per call — paid at
-    plan-BUILD time by every widened query, twice per bench run —
-    while ``inputFiles()`` + stat arithmetic measures 1-4 ms for the
-    identical widen-or-not decision. The estimate mirrors Spark's
-    FilePartition packing to first order (each file contributes
-    ceil(size / maxPartitionBytes) splits; sub-128MB files are counted
-    once — packing multiple tiny files into one split only LOWERS the
-    true split count, which errs toward widening small scans, the safe
-    direction). Callers pass scan-shaped frames (load_table outputs);
-    non-file-backed or non-local frames fall back to the RDD probe."""
-    slots = spark.sparkContext.defaultParallelism
-    threshold = max(2, slots // 2)
-    splits: int | None = None
+def scan_split_estimate(df: DataFrame, spark: SparkSession) -> int | None:
+    """Lower bound on the number of splits Spark reads ``df``'s local
+    files in: ``ceil(total_bytes / spark.sql.files.maxPartitionBytes)``,
+    as Spark's split size never exceeds that conf. (Counting each file
+    as at least one split would overstate it whenever Spark packs small
+    files together.) From the file listing (``inputFiles()`` plus stat,
+    1-4 ms) rather than ``df.rdd.getNumPartitions()``, which plans the
+    query on the driver (40-95 ms). None for non-file-backed or
+    non-local frames."""
     try:
-        files = df.inputFiles()
-        max_part = 128 << 20  # spark.sql.files.maxPartitionBytes default
+        max_part = int(
+            spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        )
         total = 0
-        for uri in files:
+        for uri in df.inputFiles():
             if uri.startswith("file:"):
                 path = uri[len("file:"):]
                 while path.startswith("//"):
                     path = path[1:]
             elif uri.startswith("/"):
                 path = uri
-            else:  # remote FS — no cheap local stat; use the RDD probe
-                splits = None
-                break
-            total += -(-os.stat(path).st_size // max_part)
-        else:
-            splits = total
-    except Exception:
-        splits = None
+            else:  # remote FS — no cheap local stat
+                return None
+            total += os.stat(path).st_size
+    except (AttributeError, OSError, Py4JError):  # no JVM session, or an unstat-able file
+        return None
+    return -(-total // max_part)
+
+
+def ensure_scan_parallelism(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """Round-robin repartition ONLY when the scan yields fewer splits
+    than half the scheduler's slots — the local-fixture case (one small
+    parquet file = one split = one core doing all the narrow per-row
+    work). On any real deployment the scan has ≥ thousands of splits
+    and this returns ``df`` unchanged, so no full-corpus shuffle is
+    baked into production plans. Shared by the dedup shingle paths and
+    the embedding/ANN scoring paths, whose broadcast nested-loop scoring
+    otherwise runs single-task over the one-split embeddings fixture.
+    The split count comes from :func:`scan_split_estimate`, a lower
+    bound, so the decision errs toward widening; frames it cannot
+    estimate fall back to the RDD probe."""
+    slots = spark.sparkContext.defaultParallelism
+    threshold = max(2, slots // 2)
+    splits = scan_split_estimate(df, spark)
     if splits is None:
         splits = df.rdd.getNumPartitions()
     if splits < threshold:
