@@ -50,7 +50,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from tfl_bikes_data_pipeline_spark import registry
-from tfl_bikes_data_pipeline_spark.session import get_spark
+from tfl_bikes_data_pipeline_spark.session import codegen_compiles, get_spark
 
 #: the driver tail-captures 2000 chars; leave headroom for the newline.
 MAX_LINE = 1900
@@ -223,6 +223,7 @@ def main() -> None:
     cold: dict[str, float] = {}
     steady: dict[str, float] = {}
     steady_reps: dict[str, list[float]] = {}
+    compiles: dict[str, dict[str, int]] = {}
     # Interleaved stationarity probes (r13): scan_calib re-measured
     # every PROBE_EVERY queries; `segment_of[name]` maps each query to
     # the probe interval it ran inside so normalization can rescale
@@ -235,19 +236,24 @@ def main() -> None:
         segment_of[name] = len(scan_probes) - 1
         fn = registry.QUERIES[name]
 
-        def _once() -> float:
+        def _once() -> tuple[float, int]:
+            compiles0 = codegen_compiles(spark)
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
-            return round(time.perf_counter() - t0, 3)
+            seconds = round(time.perf_counter() - t0, 3)
+            return seconds, codegen_compiles(spark) - compiles0
 
-        cold[name] = _once()
+        cold[name], cold_compiles = _once()
         # steady = median of STEADY_REPS fresh-plan runs (r14): robust
         # to a transient hitting any single rep; rep 1 preserved in the
         # detail artifact as the rounds-6-13 single-rep reading.
-        reps = [_once() for _ in range(STEADY_REPS)]
-        steady_reps[name] = reps
+        reps, rep_compiles = zip(*(_once() for _ in range(STEADY_REPS)))
+        steady_reps[name] = list(reps)
         steady[name] = sorted(reps)[len(reps) // 2]
+        # a steady compile means the query's generated source differs
+        # from run to run, so the codegen cache cannot serve it
+        compiles[name] = {"cold": cold_compiles, "steady": sum(rep_compiles)}
         # Rank-recipe queries persist a MEMORY_AND_DISK sorted copy of
         # their input for the frame's lifetime (bounded at 4 by
         # functions/ranks._MAX_LIVE). Release between queries — AFTER
@@ -366,7 +372,11 @@ def main() -> None:
                 f"{STEADY_REPS} fresh-plan warm runs per query since r14 — "
                 "single-rep steady was transient-vulnerable, see VERDICT "
                 "r13 item 1; `steady_reps` keeps every raw rep, rep 1 "
-                "being the old single-rep protocol's reading). The "
+                "being the old single-rep protocol's reading). "
+                "`codegen_compiles` counts Janino compiles (codegen-cache "
+                "misses) in the cold run and summed over the steady reps; "
+                "a nonzero steady count means the query's generated source "
+                "changes from run to run. The "
                 "stdout line carries the driver-pinned cold subset only "
                 "(2000-char tail-capture budget).\n\n"
                 "Session health — a fixed 1M-row calibration query, a "
@@ -472,6 +482,7 @@ def main() -> None:
                                 "cold": cold[n],
                                 "steady": steady[n],
                                 "steady_reps": steady_reps[n],
+                                "codegen_compiles": compiles[n],
                             }
                             for n in cold
                         },

@@ -60,9 +60,14 @@ def test_bench_runs_to_completion_and_emits_contract_json():
     n_reps = full["steady_reps_per_query"]
     assert n_reps >= 3 and n_reps % 2 == 1, "median needs an odd count >= 3"
     for q, t in full["queries"].items():
-        assert set(t) == {"cold", "steady", "steady_reps"}, (
-            f"{q} missing cold/steady/steady_reps split"
+        assert set(t) == {"cold", "steady", "steady_reps", "codegen_compiles"}, (
+            f"{q} missing cold/steady/steady_reps/codegen_compiles split"
         )
+        # Janino compiles: the cold run's, and the sum over the steady reps
+        assert set(t["codegen_compiles"]) == {"cold", "steady"}, q
+        assert all(
+            isinstance(c, int) and c >= 0 for c in t["codegen_compiles"].values()
+        ), q
         assert t["cold"] >= 0 and t["steady"] >= 0
         assert len(t["steady_reps"]) == n_reps
         assert all(r >= 0 for r in t["steady_reps"])

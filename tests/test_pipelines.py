@@ -160,13 +160,18 @@ def test_warehouse_read_back_schema_matches_inferred(spark, sf_dir, tmp_path):
 
 
 def test_scan_split_estimate_on_many_small_files(spark, tmp_path):
-    """Many small files: the estimate is ceil(total / maxPartitionBytes),
-    a lower bound on Spark's split count, not one split per file."""
+    """The estimate is Spark's own split count, including the per-file
+    open cost and the bytes-per-core split size, for many small files,
+    for every single-file fixture table and under a changed
+    maxPartitionBytes or minPartitionNum."""
     import math
     import os
 
+    from tests.conftest import SF_CORRECT
     from tfl_bikes_data_pipeline_spark.tables import (
+        TABLE_NAMES,
         ensure_scan_parallelism,
+        load_table,
         scan_split_estimate,
     )
 
@@ -175,16 +180,39 @@ def test_scan_split_estimate_on_many_small_files(spark, tmp_path):
     df = spark.read.parquet(out)
     files = [f for f in os.listdir(out) if f.endswith(".parquet")]
     assert len(files) == 16
-    total = sum(os.path.getsize(os.path.join(out, f)) for f in files)
 
-    assert scan_split_estimate(df, spark) == 1
-    assert scan_split_estimate(df, spark) <= df.rdd.getNumPartitions()
-    assert ensure_scan_parallelism(df, spark) is not df  # widened
+    assert scan_split_estimate(df, spark) == df.rdd.getNumPartitions()
+    if spark.sparkContext.defaultParallelism >= 2:
+        # 16 row groups over one split per slot: no shuffle needed
+        assert ensure_scan_parallelism(df, spark) is df
+
+    max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    for name in TABLE_NAMES:
+        table = load_table(spark, SF_CORRECT, name)
+        size = os.path.getsize(f"{SF_CORRECT}/{name}.parquet")
+        assert scan_split_estimate(table, spark) == table.rdd.getNumPartitions(), name
+        # the estimate before open costs and bytes per core were counted:
+        # every single-file fixture keeps it, so each keeps its widening
+        assert scan_split_estimate(table, spark) == math.ceil(size / max_bytes) == 1, name
+        assert ensure_scan_parallelism(table, spark) is not table, name
 
     key = "spark.sql.files.maxPartitionBytes"
     prev = spark.conf.get(key)
     spark.conf.set(key, "256b")
     try:
-        assert scan_split_estimate(df, spark) == math.ceil(total / 256)
+        df = spark.read.parquet(out)  # DataFrame.rdd is cached per frame
+        assert scan_split_estimate(df, spark) == df.rdd.getNumPartitions() > 16
+        # one row group cut into many splits still runs on one core
+        lineitem = load_table(spark, SF_CORRECT, "lineitem")
+        assert scan_split_estimate(lineitem, spark) == lineitem.rdd.getNumPartitions() > 1
+        assert ensure_scan_parallelism(lineitem, spark) is not lineitem
     finally:
         spark.conf.set(key, prev)
+
+    # minPartitionNum replaces the slot count in the bytes per core
+    spark.conf.set("spark.sql.files.minPartitionNum", "16")
+    try:
+        df = spark.read.parquet(out)
+        assert scan_split_estimate(df, spark) == df.rdd.getNumPartitions() == 16
+    finally:
+        spark.conf.unset("spark.sql.files.minPartitionNum")

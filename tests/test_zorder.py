@@ -320,6 +320,35 @@ def test_compact_files_per_partition_splits_files(spark, sf_dir):
     assert back.count() == events.count()
 
 
+def test_compact_files_per_partition_at_one_shuffle_partition(spark, sf_dir, tmp_path):
+    """A session with one shuffle partition (one task slot) still splits
+    each partition dir into files_per_partition files: the salted
+    repartition needs at least that many buckets."""
+    from tfl_bikes_data_pipeline_spark.warehouse import (
+        compact_partitions,
+        month_partition,
+        write_partitioned,
+    )
+
+    path = str(tmp_path / "events")
+    events = load_table(spark, sf_dir, "events").withColumn("ym", month_partition())
+    write_partitioned(events, path, ["ym"], mode="overwrite")
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        compact_partitions(spark, path, ["ym"], files_per_partition=4)
+    finally:
+        spark.conf.set(key, prev)
+
+    counts = {
+        d: len(glob.glob(f"{d}/*.parquet")) for d in glob.glob(f"{path}/ym=*")
+    }
+    assert counts
+    assert all(1 < c <= 4 for c in counts.values()), counts
+    assert spark.read.parquet(path).count() == events.count()
+
+
 def test_current_version_degrades_on_corrupt_marker(spark, tmp_path):
     """A 0-byte _CURRENT (legacy crash inside a pointer flip) must
     degrade to the newest complete snapshot, not ValueError-brick the

@@ -4,8 +4,17 @@ Mirrors the reference's session setup (``spark/transform_load.py:512-525``:
 yarn-vs-local master, partition-column type inference disabled) but tuned
 for the Spark-first engine: AQE enabled for runtime re-planning and skew
 handling, UTC session timezone (required for DuckDB-oracle comparison),
-Arrow enabled for the Pandas-UDF extension operators, and shuffle
-partitions sized to the local core count rather than the 200 default.
+Arrow enabled for the Pandas-UDF extension operators. Two sizing confs,
+set when the session is built, cut the fixed cost every query pays:
+
+- ``spark.sql.shuffle.partitions`` is the task-slot count
+  (:func:`task_slots`, the same number ``master`` gets), not the 200
+  default: at ``local[1]`` a larger count only makes AQE coalesce the
+  partitions back and each global ``orderBy`` run a range-sampling job.
+- ``spark.sql.codegen.cache.maxEntries`` is 4096, not 100: the JVM-wide
+  cache of generated classes must hold a whole query mix (one pass over
+  the 210 registry queries at sf0.01 compiled about 2,700 classes), or it
+  evicts them before reuse and every query pays a Janino compile again.
 
 At cluster scale the same factory applies unchanged — only ``master`` and
 the memory/shuffle sizing knobs move to spark-submit conf.
@@ -23,6 +32,11 @@ from pyspark.sql import SparkSession
 #: so relying on :func:`get_spark` alone silently breaks there (round-1
 #: lesson: 16 queries died on the nanos-parquet read). All of these are
 #: runtime-settable SQL confs, so they can be applied to any live session.
+#: The two sizing confs of :func:`get_spark` are not among them: the
+#: codegen cache size is static, and the shuffle-partition count belongs
+#: to whoever sized the session's task slots. A plain session built
+#: without the factory keeps Spark's defaults for both: slower per
+#: query, never wrong.
 RUNTIME_SQL_CONFS: dict[str, str] = {
     # parquet TIMESTAMP(NANOS) (the events fixture) is otherwise unreadable;
     # read as long, convert in tables.load_table — stays distributed.
@@ -74,6 +88,27 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+#: Entries in the JVM-wide cache of generated classes; holds the ~2,700
+#: distinct classes of one sf0.01 pass over every registry query.
+CODEGEN_CACHE_ENTRIES = 4096
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compiles in this JVM so far: one per generated class the
+    codegen cache missed."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+def task_slots() -> int:
+    """Task slots of the local session: ``$SPARK_GRAFT_CPUS`` when it is
+    a positive number, otherwise every host CPU."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
+    if cpus.isdigit() and int(cpus) > 0:
+        return int(cpus)
+    return os.cpu_count() or 1
+
+
 def get_spark(
     app_name: str = "tfl_bikes_data_pipeline_spark",
     master: str | None = None,
@@ -82,19 +117,21 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
-    Local default: ``local[$SPARK_GRAFT_CPUS]`` (falls back to all cores).
-    On a real cluster, pass ``master=None`` with spark-submit providing it.
+    Local default: ``local[task_slots()]``, with one shuffle partition
+    per slot. On a real cluster, pass ``master`` and size
+    ``shuffle_partitions`` to the data (ARCHITECTURE.md "Sizing").
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    slots = task_slots()
     if master is None:
-        master = f"local[{cpus}]"
+        master = f"local[{slots}]"
     if shuffle_partitions is None:
-        shuffle_partitions = os.cpu_count() or 32
+        shuffle_partitions = slots
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -173,52 +173,121 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def scan_split_estimate(df: DataFrame, spark: SparkSession) -> int | None:
-    """Lower bound on the number of splits Spark reads ``df``'s local
-    files in: ``ceil(total_bytes / spark.sql.files.maxPartitionBytes)``,
-    as Spark's split size never exceeds that conf. (Counting each file
-    as at least one split would overstate it whenever Spark packs small
-    files together.) From the file listing (``inputFiles()`` plus stat,
-    1-4 ms) rather than ``df.rdd.getNumPartitions()``, which plans the
-    query on the driver (40-95 ms). None for non-file-backed or
-    non-local frames."""
+def _local_input_files(df: DataFrame) -> list[str] | None:
+    """Local paths of the files ``df`` reads (``inputFiles()``), or None
+    for a non-file-backed frame, a remote file system or a frame with no
+    JVM session."""
     try:
-        max_part = int(
-            spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        uris = df.inputFiles()
+    except (AttributeError, Py4JError):
+        return None
+    paths = []
+    for uri in uris:
+        if uri.startswith("file:"):
+            path = uri[len("file:"):]
+            while path.startswith("//"):
+                path = path[1:]
+        elif uri.startswith("/"):
+            path = uri
+        else:  # remote FS — no cheap local stat
+            return None
+        paths.append(path)
+    return paths
+
+
+def _pack_splits(sizes: list[int], split_bytes: int, open_cost: int) -> int:
+    """Spark's ``FilePartition.getFilePartitions``: cut each file into
+    ``split_bytes`` chunks, then pack the chunks, largest first, into
+    partitions of at most ``split_bytes``, each chunk charged
+    ``open_cost`` once it is in. Returns the partition count."""
+    chunks = sorted(
+        (min(split_bytes, size - off) for size in sizes for off in range(0, size, split_bytes)),
+        reverse=True,
+    )
+    parts, current = 0, 0
+    for chunk in chunks:
+        if current and current + chunk > split_bytes:
+            parts, current = parts + 1, 0
+        current += chunk + open_cost
+    return parts + (1 if current else 0)
+
+
+def scan_split_estimate(df: DataFrame, spark: SparkSession) -> int | None:
+    """The number of splits Spark reads ``df``'s local files in, worked
+    out as Spark's ``FilePartition`` does: split size =
+    ``min(maxPartitionBytes, max(openCostInBytes, bytes per core))``,
+    where every file adds its length plus ``openCostInBytes`` and the
+    cores are ``spark.sql.files.minPartitionNum`` or else the leaf-node
+    default parallelism; then :func:`_pack_splits`. Every file counts as
+    splittable, as parquet is, and ``spark.sql.files.maxPartitionNum``
+    is taken as unset, as the session leaves it. From the file
+    listing (``inputFiles()`` plus stat, 1-4 ms) rather than
+    ``df.rdd.getNumPartitions()``, which plans the query on the driver
+    (40-95 ms). None for non-file-backed or non-local frames."""
+    paths = _local_input_files(df)
+    if paths is None:
+        return None
+    try:
+        conf = spark._jsparkSession.sessionState().conf()
+        max_bytes = int(conf.filesMaxPartitionBytes())
+        open_cost = int(conf.filesOpenCostInBytes())
+        min_parts = conf.filesMinPartitionNum()
+        cores = (
+            int(min_parts.get())
+            if min_parts.isDefined()
+            else int(spark._jsparkSession.leafNodeDefaultParallelism())
         )
-        total = 0
-        for uri in df.inputFiles():
-            if uri.startswith("file:"):
-                path = uri[len("file:"):]
-                while path.startswith("//"):
-                    path = path[1:]
-            elif uri.startswith("/"):
-                path = uri
-            else:  # remote FS — no cheap local stat
-                return None
-            total += os.stat(path).st_size
+        # the listing skips empty files
+        sizes = [size for size in (os.stat(p).st_size for p in paths) if size > 0]
     except (AttributeError, OSError, Py4JError):  # no JVM session, or an unstat-able file
         return None
-    return -(-total // max_part)
+    total = sum(size + open_cost for size in sizes)
+    return _pack_splits(sizes, min(max_bytes, max(open_cost, total // cores)), open_cost)
+
+
+def _row_group_count(df: DataFrame, enough: int) -> int | None:
+    """Parquet row groups across ``df``'s local files, from the footers,
+    counted until ``enough`` is reached (so a many-file table reads few
+    footers). A split reads only the row groups whose midpoint it holds,
+    so this caps how many of the scan's splits carry rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    paths = _local_input_files(df)
+    if paths is None:
+        return None
+    count = 0
+    try:
+        for path in paths:
+            count += pq.ParquetFile(path).metadata.num_row_groups
+            if count >= enough:
+                break
+    except (OSError, pa.ArrowInvalid):  # not parquet
+        return None
+    return count
 
 
 def ensure_scan_parallelism(df: DataFrame, spark: SparkSession) -> DataFrame:
     """Round-robin repartition ONLY when the scan yields fewer splits
-    than half the scheduler's slots — the local-fixture case (one small
-    parquet file = one split = one core doing all the narrow per-row
-    work). On any real deployment the scan has ≥ thousands of splits
-    and this returns ``df`` unchanged, so no full-corpus shuffle is
-    baked into production plans. Shared by the dedup shingle paths and
-    the embedding/ANN scoring paths, whose broadcast nested-loop scoring
-    otherwise runs single-task over the one-split embeddings fixture.
-    The split count comes from :func:`scan_split_estimate`, a lower
-    bound, so the decision errs toward widening; frames it cannot
-    estimate fall back to the RDD probe."""
+    that carry rows than half the scheduler's slots — the local-fixture
+    case (one small parquet file = one row group = one core doing all
+    the narrow per-row work). On any real deployment the scan has ≥
+    thousands of splits and this returns ``df`` unchanged, so no
+    full-corpus shuffle is baked into production plans. Shared by the
+    dedup shingle paths and the embedding/ANN scoring paths, whose
+    broadcast nested-loop scoring otherwise runs single-task over the
+    one-split embeddings fixture. The split count comes from
+    :func:`scan_split_estimate` (frames it cannot estimate fall back to
+    the RDD probe); when that clears the threshold, the row-group count
+    caps it, since one large row group split several ways still runs
+    on one core."""
     slots = spark.sparkContext.defaultParallelism
     threshold = max(2, slots // 2)
     splits = scan_split_estimate(df, spark)
     if splits is None:
         splits = df.rdd.getNumPartitions()
+    if splits >= threshold:
+        splits = min(splits, _row_group_count(df, threshold) or splits)
     if splits < threshold:
         return df.repartition(slots)
     return df

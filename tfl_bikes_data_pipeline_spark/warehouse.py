@@ -236,8 +236,13 @@ def _repartition_for_layout(
     )
     # explicit numPartitions: AQE's partition coalescing respects a
     # user-specified count but would merge the small salted shuffle
-    # back into one task (one file) without it.
-    n_shuffle = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    # back into one task (one file) without it. At least
+    # files_per_partition buckets, or a session with fewer shuffle
+    # partitions (one per task slot) would cap every directory there.
+    n_shuffle = max(
+        int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")),
+        files_per_partition,
+    )
     return (
         df.withColumn("__salt", salt)
         .repartition(n_shuffle, *parts, F.col("__salt"))
