@@ -49,7 +49,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from tfl_bikes_data_pipeline_spark import registry
+from tfl_bikes_data_pipeline_spark import registry, scope
 from tfl_bikes_data_pipeline_spark.session import codegen_compiles, get_spark
 
 #: the driver tail-captures 2000 chars; leave headroom for the newline.
@@ -218,8 +218,6 @@ def main() -> None:
             file=sys.stderr,
         )
 
-    from tfl_bikes_data_pipeline_spark.functions.ranks import release_rank_relations
-
     cold: dict[str, float] = {}
     steady: dict[str, float] = {}
     steady_reps: dict[str, list[float]] = {}
@@ -254,13 +252,9 @@ def main() -> None:
         # a steady compile means the query's generated source differs
         # from run to run, so the codegen cache cannot serve it
         compiles[name] = {"cold": cold_compiles, "steady": sum(rep_compiles)}
-        # Rank-recipe queries persist a MEMORY_AND_DISK sorted copy of
-        # their input for the frame's lifetime (bounded at 4 by
-        # functions/ranks._MAX_LIVE). Release between queries — AFTER
-        # both timed runs, so timings are untouched — so unrelated
-        # queries never run alongside up-to-4 corpus-scale cached
-        # relations (ADVICE r11). No-op for the ~200 non-rank queries.
-        release_rank_relations()
+        # release what the query persisted after its timed runs, so the
+        # next query's runs start with nothing cached
+        scope.release()
 
     calib_after = _calibrate(spark)
     sched_after = _calibrate_scheduler(spark)

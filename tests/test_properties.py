@@ -562,18 +562,14 @@ def test_distributed_ranks_handle_null_group_key(spark):
 
 
 def test_distributed_ranks_survive_interleaved_construction(spark):
-    """ADVICE r10: the old module-global released-on-next-call
-    discipline destroyed the FIRST frame's offsets broadcast when a
-    second rank frame was built before the first was evaluated — an
-    A/B comparison pattern. Lifecycle is now per-frame (unpersist-only,
-    never destroy), so both frames must evaluate correctly in either
-    order, and so must a frame evaluated again after explicit release."""
+    """A rank frame built before a second one must still evaluate, in
+    either order, and so must a frame evaluated again after the query
+    scope released its sorted relation and offsets broadcast: release
+    unpersists, it never destroys."""
     from pyspark.sql import functions as F
 
-    from tfl_bikes_data_pipeline_spark.functions.ranks import (
-        distribution_ranks,
-        release_rank_relations,
-    )
+    from tfl_bikes_data_pipeline_spark import scope
+    from tfl_bikes_data_pipeline_spark.functions.ranks import distribution_ranks
 
     df = spark.range(200).select(
         F.col("id").alias("event_id"),
@@ -588,70 +584,46 @@ def test_distributed_ranks_survive_interleaved_construction(spark):
     assert len(a_rows) == len(b_rows) == 200
     assert {r.bucket for r in a_rows} == {1, 2, 3, 4}
     assert {r.bucket for r in b_rows} == {1, 2}
-    # explicit release never bricks a frame — it re-evaluates (with a
-    # recomputed range exchange) instead of raising on a dead broadcast
-    release_rank_relations()
-    assert len(a.orderBy("event_id").collect()) == 200
+    scope.release()
+    assert a.orderBy("event_id").collect() == a_rows
 
 
-def test_distributed_ranks_release_frees_live_slot(spark):
-    """ADVICE r11: release() must drop the handle from the module
-    _LIVE list — a released handle previously stayed strongly
-    referenced (pinning the broadcast wrapper) and kept consuming one
-    of the _MAX_LIVE eviction slots."""
-    from pyspark.sql import functions as F
+def test_query_scope_releases_persisted_state_before_next_query(spark, sf_dir):
+    """What a registry query persists does not live on into the next
+    query: building q_topk_count leaves none of the RDDs that
+    q_quantiles_scaleout (rank recipe) and q_ann_kmeans_assign
+    (retained k-means corpus) persisted."""
+    from tfl_bikes_data_pipeline_spark import registry
 
-    from tfl_bikes_data_pipeline_spark.functions import ranks
+    def persisted() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
-    ranks.release_rank_relations()
-    df = spark.range(50).select(
-        F.col("id").alias("event_id"),
-        F.concat(F.lit("t"), (F.col("id") % 2).cast("string")).alias("event_type"),
-    )
-    _, _, res = ranks.ranked_by_group(df, "event_type", ["event_id"])
-    assert res in ranks._LIVE
-    res.release()
-    assert res not in ranks._LIVE, "released handle must leave _LIVE"
-    # idempotent: a second release (and the context-manager path) must
-    # not raise even though the handle is no longer tracked
-    res.release()
-    with ranks.ranked_by_group(df, "event_type", ["event_id"])[2]:
-        pass
-    assert not ranks._LIVE
+    held: set = set()
+    for name in ("q_quantiles_scaleout", "q_ann_kmeans_assign"):
+        before = persisted()
+        df = registry.QUERIES[name](spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+        new = persisted() - before
+        assert new, f"{name} persisted nothing, so the check would be vacuous"
+        held |= new
+    registry.QUERIES["q_topk_count"](spark, sf_dir)
+    assert not held & persisted()
 
 
-def test_distributed_ranks_hard_teardown_destroys_broadcast(spark):
-    """The destroy=True teardown path (review r11): a live handle hard-
-    destroys its broadcast; a handle that was ALREADY soft-released must
-    still destroy via its weakref when the frame (whose closure pins the
-    broadcast) is alive — the early-return used to silently skip it.
-    After teardown, fresh rank computations must work unimpeded."""
-    from pyspark.sql import functions as F
+def test_query_scope_release_keeps_built_frames_evaluable(spark, sf_dir):
+    """Rank-recipe frames built before another registry query was built
+    return the same rows afterwards, whether or not they were evaluated
+    before the release."""
+    from tfl_bikes_data_pipeline_spark import registry
 
-    from tfl_bikes_data_pipeline_spark.functions.ranks import (
-        ranked_by_group,
-        release_rank_relations,
-    )
-
-    df = spark.range(100).select(
-        F.col("id").alias("event_id"),
-        F.concat(F.lit("t"), (F.col("id") % 2).cast("string")).alias("event_type"),
-    )
-    # case 1: live handle, hard teardown via the global sweep
-    frame1, _, res1 = ranked_by_group(df, "event_type", ["event_id"])
-    release_rank_relations(destroy=True)
-    assert res1.released and res1._broadcast is None
-    # case 2: soft release first (keeps the broadcast wrapper — the
-    # pickled plan holds no Python reference, so the wrapper is the
-    # only path to a later destroy), then hard destroy on the handle
-    frame2, _, res2 = ranked_by_group(df, "event_type", ["event_id"])
-    res2.release()  # soft
-    assert res2.released and res2._broadcast is not None
-    res2.release(destroy=True)  # must destroy despite the early-return
-    assert res2._broadcast is None
-    # a destroyed-broadcast frame must not be evaluated; fresh state works
-    frame3, totals, _ = ranked_by_group(df, "event_type", ["event_id"])
-    assert frame3.count() == 100 and totals == {"t0": 50, "t1": 50}
+    q = registry.QUERIES["q_quantiles_scaleout"]
+    evaluated = q(spark, sf_dir)
+    rows = evaluated.collect()
+    assert rows
+    unevaluated = q(spark, sf_dir)
+    registry.QUERIES["q_topk_count"](spark, sf_dir)
+    assert evaluated.collect() == rows
+    assert unevaluated.collect() == rows
 
 
 def test_distributed_ranks_reject_float_group_key(spark):

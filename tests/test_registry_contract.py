@@ -73,25 +73,6 @@ def test_local_only_queries_are_covered_by_local_gate():
     assert not unguarded, f"queries with no oracle and no waiver: {sorted(unguarded)}"
 
 
-def test_coverage_pinned_listing_in_sync():
-    """COVERAGE.md's pinned listing is generated from the same registry
-    derivation (tools/gen_pinned_doc.py); a driver re-pin without a doc
-    regen is a red test, not silent drift (VERDICT r5 item 7)."""
-    import importlib.util
-    import sys
-
-    spec = importlib.util.spec_from_file_location(
-        "gen_pinned_doc", REPO / "tools" / "gen_pinned_doc.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    sys.modules.setdefault("gen_pinned_doc", mod)
-    spec.loader.exec_module(mod)
-    text = (REPO / "COVERAGE.md").read_text()
-    assert mod.pinned_block() in text, (
-        "COVERAGE.md pinned listing is stale — run python tools/gen_pinned_doc.py"
-    )
-
-
 def test_every_declared_query_is_documented_in_coverage():
     """COVERAGE.md is the judge-facing inventory — a declared query
     missing from it is invisible coverage. Doc-code sync, CI-checked."""
@@ -124,33 +105,40 @@ def test_similarity_oracle_mirror_covers_all_registrations():
     assert not unmirrored, f"oracles without the null-filtered subquery: {unmirrored}"
 
 
-def test_registry_head_matches_gen_head_ordering():
-    """The committed REGISTRY_HEAD must be exactly the staleness
-    ordering tools/gen_head.py derives from the committed
-    CORRECTNESS_r*.json artifacts (verdict r12 task 2): never-driver-
-    checked queries first, then oldest-green first. Without this
-    check, a forgotten rotation paste at round open would silently
-    freeze driver coverage on last round's pin. Self-consistent with
-    the import-time head rotation: sorted() is stable and the rotation
-    puts head names first, so a correctly-pasted head round-trips."""
-    import sys
+def test_registry_head_ordering_rule(tmp_path):
+    """The head rule over the committed artifacts plus a synthetic next
+    round: never-checked hash-oracled queries lead, the names the new
+    round checked green drop to the tail, and bound-oracled queries
+    never appear. Two queries are struck from the copied artifacts to
+    stand for queries added since the last round."""
+    hash_oracled = [q for q in registry.QUERIES if q in registry.ORACLES]
+    new_queries = [hash_oracled[3], hash_oracled[-3]]
+    latest = 0
+    for rnd, art in registry._correctness_artifacts(REPO):
+        rows = json.loads(art.read_text())
+        for q in new_queries:
+            rows.pop(q, None)
+        (tmp_path / art.name).write_text(json.dumps(rows))
+        latest = max(latest, rnd)
+    assert latest, "no committed CORRECTNESS artifacts to copy"
 
-    sys.path.insert(0, str(REPO / "tools"))
-    try:
-        import gen_head
-    finally:
-        sys.path.pop(0)
+    checked = [q for q in registry.ordering(tmp_path) if q not in new_queries]
+    now_green = checked[:10]
+    green = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+    red = {"rows_match": False, "schema_match": True, "hash_match": False, "err": None}
+    rows = {q: green for q in now_green}
+    rows[new_queries[0]] = red
+    rows.update({q: green for q in registry.BOUND_ORACLES})
+    (tmp_path / f"CORRECTNESS_r{latest + 1}.json").write_text(json.dumps(rows))
 
-    # a truncated paste would shrink the comparison window and pass
-    # vacuously — the driver pins ~50 slots, so the head must cover at
-    # least that many (review r13)
-    assert len(registry.REGISTRY_HEAD) >= 50, (
-        f"REGISTRY_HEAD has only {len(registry.REGISTRY_HEAD)} entries — "
-        "the driver pins ~50; a truncated paste silently narrows coverage"
-    )
-    expected = gen_head.ordering(str(REPO))[: len(registry.REGISTRY_HEAD)]
-    assert list(registry.REGISTRY_HEAD) == expected, (
-        "REGISTRY_HEAD is stale — regenerate with `python tools/gen_head.py` "
-        "and paste the names (first mismatch: "
-        f"{next((f'pos {i}: head={h!r} expected={e!r}' for i, (h, e) in enumerate(zip(registry.REGISTRY_HEAD, expected)) if h != e), 'length')})"
-    )
+    order = registry.ordering(tmp_path)
+    assert sorted(order) == sorted(hash_oracled)
+    assert order[:2] == new_queries
+    assert set(order[-len(now_green):]) == set(now_green)
+    assert not set(order) & set(registry.BOUND_ORACLES)
+
+
+def test_queries_lead_with_the_registry_head():
+    assert len(registry.REGISTRY_HEAD) == registry.HEAD_SIZE
+    assert list(registry.QUERIES)[: registry.HEAD_SIZE] == list(registry.REGISTRY_HEAD)
+    assert list(registry.REGISTRY_HEAD) == registry.ordering(REPO)[: registry.HEAD_SIZE]

@@ -26,6 +26,8 @@ Layout
                    journeys — the reference's transform_load stages).
 - ``warehouse``  : partitioned + bucketed parquet warehouse helpers.
 - ``registry``   : every declared query and its DuckDB oracle.
+- ``scope``      : the relations and broadcasts a query keeps past its
+                   return, released before the next query builds.
 """
 
 __version__ = "0.1.0"

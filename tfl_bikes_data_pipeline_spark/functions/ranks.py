@@ -42,10 +42,11 @@ from collections import defaultdict
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..scope import register, retain
 
 #: driver-collect ceiling on (partition, key) metadata cells, and the
 #: literal-map ceiling on distinct keys (a create_map with ~1M literal
@@ -54,93 +55,11 @@ from pyspark.sql import types as T
 _MAX_CELLS = 2_000_000
 _MAX_KEYS = 10_000
 
-class RankResources:
-    """Pins the persisted sorted relation + offsets broadcast backing
-    ONE ranked frame (lifecycle tied to the frame, not to module-global
-    call order — ADVICE r10: the old released-on-next-call discipline
-    destroyed the broadcast under interleaved construction, so a frame
-    built before another call failed at evaluation). ``release()`` is
-    idempotent and SAFE by default: it unpersists (``destroy=True`` is
-    the opt-in hard teardown), so an already-built frame stays
-    evaluable afterwards — the only cost is a silent recompute of its
-    range exchange if it is acted on again."""
-
-    def __init__(self, relation: DataFrame, broadcast) -> None:
-        self._relation = relation
-        self._broadcast = broadcast
-        self.released = False
-
-    def release(self, destroy: bool = False) -> None:
-        # A released handle must not keep consuming an eviction slot or
-        # stay strongly referenced (ADVICE r11: release() previously
-        # left self in _LIVE, pinning the Python broadcast wrapper —
-        # and thus the JVM block — until four newer computations
-        # evicted it or the global cleanup ran).
-        try:
-            _LIVE.remove(self)
-        except ValueError:
-            pass  # evicted / globally released already
-        if self.released:
-            if destroy and self._broadcast is not None:
-                # soft-released earlier, hard teardown requested now
-                # (review r11: the early-return used to silently skip
-                # this, breaking release_rank_relations(destroy=True)
-                # for previously soft-released handles).
-                self._broadcast.destroy()
-                self._broadcast = None
-            return
-        self.released = True
-        self._relation.unpersist()
-        self._relation = None
-        if destroy:
-            # hard teardown: reclaims the driver-side block and pickle
-            # file NOW; the frame must never be evaluated again.
-            self._broadcast.destroy()
-            self._broadcast = None
-        else:
-            # executor copies only: evaluation re-ships the value on
-            # next use instead of raising on a destroyed broadcast. The
-            # handle KEEPS the (tiny) Python wrapper — it is exactly
-            # what a later destroy=True needs (the pickled plan holds
-            # no Python reference; measured: a weakref to it dies the
-            # moment the strong ref drops). The wrapper pins the JVM
-            # broadcast only while the handle itself is alive; a
-            # released handle is popped from _LIVE, so once the caller
-            # drops it the ContextCleaner reclaims the JVM block too.
-            self._broadcast.unpersist(False)
-
-    def __enter__(self) -> "RankResources":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.release()
-
-
-#: live (unreleased) rank computations, oldest first. Bounded eviction
-#: keeps long sessions from accumulating MEMORY_AND_DISK copies of the
-#: sorted input (r10 review finding) without breaking interleaved
-#: frames: eviction releases, and release never destroys.
-_LIVE: list[RankResources] = []
-_MAX_LIVE = 4
-
-
-def release_rank_relations(destroy: bool = False) -> None:
-    """Release ALL live rank computations (explicit global cleanup for
-    tests / session teardown). Default is safe: released frames remain
-    evaluable, they just recompute their range exchange (the offsets
-    broadcast re-ships; its driver-side block is reclaimed by the
-    ContextCleaner once the frame itself is garbage). ``destroy=True``
-    destroys the broadcasts for IMMEDIATE driver-side reclaim — only
-    for hard teardown when no previously returned rank frame will ever
-    be evaluated again."""
-    while _LIVE:
-        _LIVE.pop().release(destroy=destroy)
-
 
 def ranked_by_group(
     df: DataFrame, part_col: str, order_cols: list[str], num_partitions: int | None = None
-) -> tuple[DataFrame, dict, RankResources]:
-    """(df + ``rn`` column, {key: group row count}, resources handle) —
+) -> tuple[DataFrame, dict]:
+    """(df + ``rn`` column, {key: group row count}) —
     exact 1-based row number of every row within its ``part_col`` group
     under ``order_cols``, distributed per the module recipe.
     ``order_cols`` must end in a unique tie-break for deterministic
@@ -154,10 +73,8 @@ def ranked_by_group(
     metadata aggregation as real Spark jobs BEFORE any action on the
     returned frame (the offsets must exist to build the plan), so
     plan-only tooling pays that cost at build time. The persisted
-    sorted relation + offsets broadcast belong to the returned handle;
-    they auto-evict (oldest first, unpersist-only — always safe) once
-    more than ``_MAX_LIVE`` computations are live, or sooner via
-    ``handle.release()`` / ``release_rank_relations()``."""
+    sorted relation and the offsets broadcast are held by the query
+    scope (``scope.py``)."""
     spark = df.sparkSession
     key_type = df.schema[part_col].dataType
     if isinstance(key_type, (T.FloatType, T.DoubleType)):
@@ -168,16 +85,12 @@ def ranked_by_group(
             "value); cast the key to string/decimal or use "
             "Window.partitionBy"
         )
-    while len(_LIVE) >= _MAX_LIVE:
-        _LIVE.pop(0).release()
     n_parts = num_partitions or max(
         df.rdd.getNumPartitions(), spark.sparkContext.defaultParallelism
     )
     cols = [F.col(part_col)] + [F.col(c) for c in order_cols]
-    d = (
-        df.repartitionByRange(n_parts, *cols)
-        .sortWithinPartitions(part_col, *order_cols)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    d = retain(
+        df.repartitionByRange(n_parts, *cols).sortWithinPartitions(part_col, *order_cols)
     )
     # metadata pass: #partitions × #keys rows — driver-bounded by
     # construction (the partition count and the key cardinality, never
@@ -220,9 +133,7 @@ def ranked_by_group(
             offsets[(pid, key)] = acc
             acc += n
         totals[key] = acc
-    bc = spark.sparkContext.broadcast(offsets)
-    resources = RankResources(d, bc)
-    _LIVE.append(resources)
+    bc = register(spark.sparkContext.broadcast(offsets))
 
     # fresh StructType: StructType.add MUTATES the receiver, and
     # d.schema is the live schema object of d itself
@@ -265,7 +176,7 @@ def ranked_by_group(
             out["rn"] = local.values + bases.astype("int64").values
             yield out
 
-    return d.mapInPandas(op, schema=out_schema), totals, resources
+    return d.mapInPandas(op, schema=out_schema), totals
 
 
 def _totals_expr(part_col: str, totals: dict) -> Column:
@@ -298,7 +209,7 @@ def distribution_ranks(
     ``cume``) with EXACT SQL window semantics (ntile / percent_rank /
     cume_dist over ``partition by part_col order by order_cols``),
     computed scale-out per the module recipe."""
-    ranked, totals, _resources = ranked_by_group(df, part_col, order_cols)
+    ranked, totals = ranked_by_group(df, part_col, order_cols)
     n = F.lit(n_buckets)
     N = _totals_expr(part_col, totals)
     s = (N / n).cast("long")  # base bucket size (floor)

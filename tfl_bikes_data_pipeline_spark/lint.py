@@ -107,7 +107,7 @@ def _is_bound_filter(condition_str: str) -> bool:
 #: nodes that may sit between a bound Filter and the leaf scan it
 #: bounds without voiding the declaration: row-wise, cardinality-
 #: preserving-or-shrinking, single-child shapes only (Repartition
-#: covers the fixture-scale _ensure_scan_parallelism round-robin).
+#: covers the fixture-scale tables.ensure_scan_parallelism round-robin).
 _NARROW_CHAIN_NODES = (
     "Project",
     "SubqueryAlias",

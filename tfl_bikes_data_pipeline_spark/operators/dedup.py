@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
+from ..scope import register, retain
 from ..tables import ensure_scan_parallelism, load_table, table_row_count
 
 NUM_MINHASH = 8
@@ -55,50 +56,9 @@ COSINE_DUP_THRESHOLD = 0.4
 NGRAM_MAX_DF = 16
 
 
-# persisted-relation lifecycle: a relation persisted inside a
-# lazily-returned plan must outlive the caller's materialization of
-# that plan, so it cannot be unpersisted before returning. Each dedup
-# invocation instead releases the PREVIOUS invocation's relations —
-# sequential use (bench, differential gate, the driver) holds at most
-# one generation of executor storage — and callers that interleave
-# dedup plans can call release_cached_relations() once the older
-# results are materialized (recomputation stays correct, just slower).
-_CACHED_RELATIONS: list[DataFrame] = []
-
-
-def release_cached_relations() -> None:
-    """Unpersist every relation cached by earlier dedup invocations."""
-    while _CACHED_RELATIONS:
-        _CACHED_RELATIONS.pop().unpersist()
-
-
-def _retain(df: DataFrame) -> DataFrame:
-    """Persist ``df`` (MEMORY_AND_DISK) and register it for deferred
-    release at the next dedup invocation. LAZY on purpose — a blanket
-    eager count() here was tried and measured (round 6): most _retain
-    sites are consumed by scans inside ONE downstream job, where
-    Spark's cache population shares a single evaluation and the extra
-    materialization job only serializes the pipeline (+0.2-1.1 s per
-    query at sf0.1 on minhash/triangles/substrings, no winners). The
-    one real recompute hazard — an ITERATIVE consumer whose round-0
-    job fans out over the unmaterialized cache across stages — is
-    fixed at its site (connected_components pre-materializes edges and
-    labels; measured 373 s → 30 s at 4×). New iterative consumers must
-    do the same."""
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _CACHED_RELATIONS.append(df)
-    return df
-
-
 # ---------------------------------------------------------------------------
 # building blocks
 # ---------------------------------------------------------------------------
-
-#: moved to tables.ensure_scan_parallelism (r13: the embedding/ANN
-#: paths need it too); this alias keeps the historical private name
-#: every dedup call site and test uses.
-_ensure_scan_parallelism = ensure_scan_parallelism
-
 
 def shingle_rel(documents: DataFrame, n: int = DEFAULT_SHINGLE) -> DataFrame:
     """(doc_id, shingle) — distinct word n-grams per document.
@@ -256,7 +216,7 @@ def _grouped_postings(sets: DataFrame) -> DataFrame:
     heavy counts). Retained (MEMORY_AND_DISK) across those readers;
     storage is one row per distinct shingle, the same order as the
     posting stream it replaces."""
-    return _retain(
+    return retain(
         sets.where(F.col("n_shingles") > 0)
         .select("doc_id", F.explode("sset").alias("shingle"))
         .groupBy("shingle")
@@ -1043,7 +1003,6 @@ def embedding_cosine_pairs_blocked(
     """
     from ..functions.vectors import dot_expr, with_norm
 
-    release_cached_relations()
     if num_centroids is None:
         # fallback for raw DataFrames with no metadata in reach: one
         # count action. The declared query path threads the count from
@@ -1075,17 +1034,16 @@ def embedding_cosine_pairs_blocked(
     # Both self-join sides read this relation — persist it so the
     # centroid-scoring + window pipeline runs once, not twice (no
     # ReusedExchange fires here: the two sides project different
-    # aliases before the bucket-key partitioning). Lifecycle via
-    # _retain — released at the next dedup invocation. The two-level
+    # aliases before the bucket-key partitioning). The two-level
     # assignment already carries (cv, nv) through its rank window, so
     # only the flat path re-attaches them (a second corpus pass the
     # two-level path avoids).
     if assign_mode == "flat":
-        bucketed = _retain(_flat_multi_assign(e, centroids, nassign).join(e, "vec_id"))
+        bucketed = retain(_flat_multi_assign(e, centroids, nassign).join(e, "vec_id"))
     elif assign_mode == "two_level":
-        bucketed = _retain(_two_level_multi_assign(e, centroids, num_centroids, nassign))
+        bucketed = retain(_two_level_multi_assign(e, centroids, num_centroids, nassign))
     elif assign_mode == "three_level":
-        bucketed = _retain(
+        bucketed = retain(
             _three_level_multi_assign(e, centroids, num_centroids, nassign)
         )
     else:
@@ -1159,7 +1117,6 @@ def embedding_cosine_pairs_probed(
     home bucket is rank 1 of the same pass — no second scoring)."""
     from ..functions.vectors import dot_expr, with_norm
 
-    release_cached_relations()
     if num_centroids is None:
         # fallback for raw DataFrames (one count action); the declared
         # query threads the parquet-footer count instead — one job.
@@ -1188,7 +1145,7 @@ def embedding_cosine_pairs_probed(
     # (library variant, exact O(n·k)) scores all k centroids on an
     # array-free stream and re-attaches arrays with one join. Either
     # way the persisted relation below is read by BOTH the home and
-    # probe sides (lifecycle via _retain).
+    # probe sides.
     if assign_mode == "flat":
         scored = e.crossJoin(F.broadcast(centroids)).select(
             "vec_id",
@@ -1201,13 +1158,13 @@ def embedding_cosine_pairs_probed(
         ranked_ids = scored.withColumn("rn", F.row_number().over(w)).where(
             F.col("rn") <= nprobe
         )
-        ranked = _retain(ranked_ids.join(e, "vec_id"))
+        ranked = retain(ranked_ids.join(e, "vec_id"))
     elif assign_mode == "two_level":
-        ranked = _retain(
+        ranked = retain(
             _two_level_multi_assign(e, centroids, num_centroids, nprobe, with_rank=True)
         )
     elif assign_mode == "three_level":
-        ranked = _retain(
+        ranked = retain(
             _three_level_multi_assign(
                 e, centroids, num_centroids, nprobe, with_rank=True
             )
@@ -1331,11 +1288,10 @@ def connected_components(
     into several and diverge from the exact recursive-CTE oracles.
     Near-dup components are tiny in practice (2-3 rounds).
 
-    Lifecycle: ``edges`` goes through ``_retain`` (freed at the next
-    dedup invocation); per-round label relations are CHECKPOINTED (see
-    the in-loop comment) — their blocks release at driver GC of the
-    underlying RDDs rather than via unpersist, a bounded
-    rounds × |labels| cost per call.
+    ``edges`` is retained in the query scope; per-round label
+    relations are CHECKPOINTED (see the in-loop comment) — their blocks
+    release at driver GC of the underlying RDDs rather than via
+    unpersist, a bounded rounds × |labels| cost per call.
     """
     # both orientations via ONE narrow explode, not union(swap): a
     # union references the (possibly expensive — embedding pairs cost
@@ -1350,7 +1306,7 @@ def connected_components(
     # edge count. One upstream filter gives both branches the same
     # edge set (a near-dup pair with a null doc id is garbage either
     # way; callers own their null policy).
-    edges = _retain(
+    edges = retain(
         pairs.where(F.col("doc_a").isNotNull() & F.col("doc_b").isNotNull())
         .select(
             F.explode(
@@ -1473,10 +1429,9 @@ def connected_components(
         labels = new_labels
         if done:
             break
-    # the returned lazy plan reads the final checkpointed labels;
-    # registration keeps the API uniform (unpersist is a no-op there —
-    # blocks free at driver GC, see the loop comment).
-    _CACHED_RELATIONS.append(labels)
+    # the returned lazy plan reads the final checkpointed labels
+    # (unpersist is a no-op on them: blocks free at driver GC)
+    register(labels)
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
@@ -1544,14 +1499,13 @@ def _lsh_pairs_unordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumers that aggregate or cluster (connected components, degree
     stats, triangles) must not inherit a useless global range-exchange
     baked into their cached edge relation."""
-    documents = _ensure_scan_parallelism(
+    documents = ensure_scan_parallelism(
         load_table(spark, sf_dir, "documents"), spark
     )
     # the per-doc set relation feeds signatures (narrow) and the verify
     # joins — persist the 1-row-per-doc arrays (MEMORY_AND_DISK: spills
-    # instead of OOMing at large SF; released at the next invocation).
-    release_cached_relations()
-    sets = _retain(shingle_sets(documents))
+    # instead of OOMing at large SF).
+    sets = retain(shingle_sets(documents))
     candidates = lsh_candidate_pairs(minhash_signatures(sets))
     return verify_candidates(sets, candidates, JACCARD_THRESHOLD)
 
@@ -1577,13 +1531,12 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrays. The input is widened CONDITIONALLY: the fixture is a
     single parquet split, which would serialize the per-row shingle
     build on one core — but at warehouse scale the scan already yields
-    thousands of splits and _ensure_scan_parallelism is a no-op (no
+    thousands of splits and ensure_scan_parallelism is a no-op (no
     unconditional full-corpus text shuffle baked into the plan)."""
-    documents = _ensure_scan_parallelism(
+    documents = ensure_scan_parallelism(
         load_table(spark, sf_dir, "documents"), spark
     )
-    release_cached_relations()
-    sets = _retain(shingle_sets(documents, with_digests=False))
+    sets = retain(shingle_sets(documents, with_digests=False))
     return ngram_jaccard_pairs_pruned(sets, JACCARD_THRESHOLD).orderBy(
         "doc_a", "doc_b"
     )
@@ -1594,11 +1547,10 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     with shingle-set containment ≥ CONTAINMENT_THRESHOLD over the same
     df-capped inverted index as the jaccard query. Catches the
     quote/excerpt duplication mode symmetric jaccard is blind to."""
-    documents = _ensure_scan_parallelism(
+    documents = ensure_scan_parallelism(
         load_table(spark, sf_dir, "documents"), spark
     )
-    release_cached_relations()
-    sets = _retain(shingle_sets(documents, with_digests=False))
+    sets = retain(shingle_sets(documents, with_digests=False))
     return containment_pairs_pruned(sets, CONTAINMENT_THRESHOLD).orderBy(
         "doc_a", "doc_b"
     )
@@ -1613,8 +1565,7 @@ def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs: per-doc hashes → banded buckets →
     hamming-verified pairs (the full simhash dedup path)."""
     documents = load_table(spark, sf_dir, "documents")
-    release_cached_relations()
-    hashes = _retain(simhash(documents))
+    hashes = retain(simhash(documents))
     return simhash_pairs(hashes).orderBy("doc_a", "doc_b")
 
 
@@ -1788,7 +1739,7 @@ def q_dedup_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style segment-level dedup over the documents corpus: repeated
     20-word spans survive only at their first corpus occurrence; docs
     whose every segment is boilerplate vanish entirely."""
-    documents = _ensure_scan_parallelism(
+    documents = ensure_scan_parallelism(
         load_table(spark, sf_dir, "documents"), spark
     )
     return segment_dedup(documents).orderBy("doc_id")
@@ -1838,7 +1789,7 @@ def duplicated_span_profile(
     pos = words.select(
         "doc_id", F.posexplode(F.expr(grams_expr)).alias("pos", "gh")
     )
-    pos = _retain(pos)
+    pos = retain(pos)
     dup = (
         pos.groupBy("gh")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -1885,10 +1836,7 @@ def q_dedup_substrings(spark: SparkSession, sf_dir: str) -> DataFrame:
     substring dedup as a relational plan): which fraction of each doc's
     tokens sits inside an 8-token window that occurs ≥2 times in the
     corpus. One row per document, zero-coverage docs included."""
-    # top-level builder: honor the module's one-generation cache rule
-    # (the span profile _retains the exploded postings relation).
-    release_cached_relations()
-    documents = _ensure_scan_parallelism(
+    documents = ensure_scan_parallelism(
         load_table(spark, sf_dir, "documents"), spark
     )
     return duplicated_span_profile(documents).orderBy("doc_id")
@@ -1909,11 +1857,10 @@ def q_dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, so each arriving batch joins against buckets, never against
     corpus documents; verify touches only colliding pairs, and the
     keep-decision is a left-anti join on matched batch ids."""
-    documents = _ensure_scan_parallelism(
+    documents = ensure_scan_parallelism(
         load_table(spark, sf_dir, "documents"), spark
     )
-    release_cached_relations()
-    sets = _retain(shingle_sets(documents))
+    sets = retain(shingle_sets(documents))
     bands = lsh_bands(minhash_signatures(sets))
     batch_bands = bands.where(F.col("doc_id") % 4 == 0)
     corpus_bands = bands.where(F.col("doc_id") % 4 != 0)
@@ -2461,12 +2408,10 @@ def q_dedup_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("in_lsh", F.lit(1))
     )
-    # _lsh_pairs_unordered already released the previous invocation's
-    # relations; retaining the hash relation here (bands read it twice)
-    # is safe because no further release happens inside this builder.
+    # the hash relation is retained: the bands read it twice
     documents = load_table(spark, sf_dir, "documents")
     sim = (
-        simhash_pairs(_retain(simhash(documents)))
+        simhash_pairs(retain(simhash(documents)))
         .select("doc_a", "doc_b")
         .distinct()
         .withColumn("in_sim", F.lit(1))

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..scope import retain
 from ..tables import load_table
 
 
@@ -54,8 +55,7 @@ def triangle_count(pairs: DataFrame, ordering: str = "degree") -> DataFrame:
     ONE wedge-join pass: the closing edge attaches as a LEFT join with
     a match flag, so triangles and wedges count in the same aggregate;
     the deduped edge and oriented-edge relations are persisted across
-    their readers for the duration of the plan (released at the next
-    [[dedup]]-lifecycle invocation).
+    their readers for the rest of the query.
 
     ``ordering="id"`` orients by vertex id instead (skipping the degree
     aggregate + attach joins) — ~1.2 s less constant overhead, but
@@ -65,17 +65,9 @@ def triangle_count(pairs: DataFrame, ordering: str = "degree") -> DataFrame:
     the declared query always uses the degree ordering because the
     100 TB failure mode (a template family concentrated on low ids) is
     exactly the one id-ordering cannot bound."""
-    from .dedup import _retain
-
     if ordering not in ("degree", "id"):
         raise ValueError(f"ordering must be 'degree' or 'id', got {ordering!r}")
-
-    # no release here: the incoming pair plan may itself read relations
-    # the dedup lifecycle retained (q_dedup_minhash_lsh's shingle sets)
-    # — releasing them now would silently force full recomputation.
-    # This _retain joins the same generation; the NEXT top-level dedup
-    # invocation frees everything.
-    e = _retain(
+    e = retain(
         pairs.select(
             F.least("doc_a", "doc_b").alias("lo"),
             F.greatest("doc_a", "doc_b").alias("hi"),
@@ -84,7 +76,7 @@ def triangle_count(pairs: DataFrame, ordering: str = "degree") -> DataFrame:
     if ordering == "id":
         # lo < hi already: the id order needs no degree attach; the
         # wedge tie-break below degenerates to (b < c) via dd ties.
-        o = _retain(
+        o = retain(
             e.select(
                 F.col("lo").alias("src"),
                 F.col("hi").alias("dst"),
@@ -102,7 +94,7 @@ def triangle_count(pairs: DataFrame, ordering: str = "degree") -> DataFrame:
         # key(v) = (deg(v), v); lo < hi always, so lo comes first iff
         # dl <= dh — the total order every stage below shares.
         lo_first = F.col("dl") <= F.col("dh")
-        o = _retain(
+        o = retain(
             ed.select(
                 F.when(lo_first, F.col("lo")).otherwise(F.col("hi")).alias("src"),
                 F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("dst"),

@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..scope import retain
 from ..tables import load_table
 
 META_SCHEMA = (
@@ -463,14 +464,12 @@ def q_multimodal_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual-hash near-dup across the binary payload column: the
     image-dedup pass of a multimodal ingest pipeline (byte-identical
     copies hash equal; near-identical payloads land within the hamming
-    budget). The hash relation is _retain'd before the banded
+    budget). The hash relation is retained before the banded
     self-join — without it each side of the join re-runs the
     mapInPandas decode (the same discipline q_dedup_simhash_pairs
     applies, dedup.py:1273)."""
-    from .dedup import _retain, release_cached_relations
     from ..tables import ensure_scan_parallelism
 
-    release_cached_relations()
     # conditional widen before the opaque mapInPandas decode: the
     # single-row-group fixture otherwise runs the whole per-payload
     # pixel/hash pass in ONE Python worker (profiled r13: 1-task
@@ -479,7 +478,7 @@ def q_multimodal_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents = ensure_scan_parallelism(
         load_table(spark, sf_dir, "documents"), spark
     )
-    hashes = _retain(ahash(attach_payload(documents)))
+    hashes = retain(ahash(attach_payload(documents)))
     return ahash_pairs(hashes).orderBy("doc_a", "doc_b")
 
 
@@ -599,10 +598,8 @@ def q_multimodal_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (doc_a, doc_b, hamming, copies_a, copies_b) over
     representatives, cluster sizes carried so downstream keep/drop
     logic can weight by exact-duplicate mass."""
-    from .dedup import _retain, release_cached_relations
     from ..tables import ensure_scan_parallelism
 
-    release_cached_relations()
     # conditional widen: the md5-digest pass and (via the rep join's
     # inherited partitioning) the representative ahash decode otherwise
     # run single-task over the one-split fixture (profiled r13: 1-task
@@ -618,8 +615,8 @@ def q_multimodal_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reps feeds THREE joins below (representative selection + both
     # cluster-size annotations); uncached, each consumer re-ran the
     # full digest scan+groupBy (measured 23.4 s vs the flat listing's
-    # 16.7 s at 20× before the _retain)
-    reps = _retain(
+    # 16.7 s at 20× before the retain)
+    reps = retain(
         digests.groupBy("dg").agg(
             F.min("doc_id").alias("rep_id"),
             F.count(F.lit(1)).alias("n_copies"),
@@ -635,7 +632,7 @@ def q_multimodal_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
         reps.select("rep_id"),
         wp["doc_id"] == F.col("rep_id"),
     ).select("doc_id", "payload")
-    pairs = ahash_pairs(_retain(ahash(rep_payloads)))
+    pairs = ahash_pairs(retain(ahash(rep_payloads)))
     a = reps.select(
         F.col("rep_id").alias("doc_a"), F.col("n_copies").alias("copies_a")
     )

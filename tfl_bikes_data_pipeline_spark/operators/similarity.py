@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_expr, to_double_vec, with_norm
+from ..scope import retain
 from ..tables import load_table
 
 NUM_QUERIES = 5
@@ -291,15 +292,11 @@ def kmeans_refine(
     round (and, because Spark's CacheManager matches canonicalized
     analyzed plans, the caller's own ``with_norm(corpus)`` consumers —
     the final assign/search pass of q_ann_kmeans_assign and
-    q_ann_ivf_refined_topk) reads the cached relation. Lifecycle via
-    dedup's ``_retain`` — released at the next top-level query's
-    ``release_cached_relations()``, never across bench runs."""
-    from .dedup import _retain
-
+    q_ann_ivf_refined_topk) reads the cached relation."""
     spark = corpus.sparkSession
     # one corpus pass TOTAL (r13 removed the per-round re-join; r14
     # retains the normed corpus across rounds).
-    cn = _retain(with_norm(corpus, "cv", "ncv"))
+    cn = retain(with_norm(corpus, "cv", "ncv"))
     for _ in range(iterations):
         kn = with_norm(centroids, "qv", "nqv")
         # narrow per-row argmax (r14): the previous crossJoin+window
@@ -495,9 +492,6 @@ def q_ann_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     make the whole run SQL-expressible, so the iterated algorithm gets a
     full DuckDB oracle (2 unrolled Lloyd rounds) — plus the inertia
     regression check in tests/test_similarity.py."""
-    from .dedup import release_cached_relations
-
-    release_cached_relations()  # top-level query over fresh scans
     from ..tables import ensure_scan_parallelism
 
     embeddings = load_table(spark, sf_dir, "embeddings")
@@ -911,9 +905,6 @@ def q_ann_ivf_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trained IVF index end-to-end: 2 Lloyd rounds refine the seed
     centroids, then the nprobe search runs against the refined index —
     the full build-then-serve ANN pipeline as one declared relation."""
-    from .dedup import release_cached_relations
-
-    release_cached_relations()  # top-level query over fresh scans
     from ..tables import ensure_scan_parallelism
 
     embeddings = load_table(spark, sf_dir, "embeddings")
@@ -1901,12 +1892,6 @@ def embedding_covariance(
     Per-dimension sums ride the same explode and join back as a
     broadcast (d rows).
 
-    Composable library operator: it _retains its aggregate but never
-    releases the dedup cache lifecycle — releasing here would silently
-    force recomputation of any retained relation the INPUT plan reads
-    (the q_graph_triangles bug class; see the dedup lifecycle notes).
-    The top-level query builders call release_cached_relations().
-
     Two interchangeable partial-sum producers feed the same (i, j)
     aggregate — pinned bit-identical by
     ``tests/test_similarity.py::test_covariance_impls_identical``:
@@ -1921,8 +1906,6 @@ def embedding_covariance(
       communication bound.
     - ``impl="expr"``: the pure-JVM narrow explode (kept as the
       zero-Python fallback and the A/B witness)."""
-    from .dedup import _retain
-
     if impl not in ("arrow", "expr"):
         raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
 
@@ -1980,7 +1963,7 @@ def embedding_covariance(
             F.col("c.p").alias("p"),
             F.lit(1).cast("long").alias("cnt"),
         )
-    sums = _retain(
+    sums = retain(
         rows.groupBy("i", "j")
         .agg(
             F.sum(F.col("p").cast("decimal(38,0)")).cast("string").cast("double").alias("s_i"),
@@ -2010,9 +1993,6 @@ def embedding_covariance(
 
 
 def q_embed_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import release_cached_relations
-
-    release_cached_relations()  # top-level query over fresh scans
     emb = load_table(spark, sf_dir, "embeddings")
     return embedding_covariance(emb).orderBy("i", "j")
 
@@ -2158,9 +2138,6 @@ def pca_power_projection(
 
 
 def q_embed_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import release_cached_relations
-
-    release_cached_relations()  # top-level query over fresh scans
     emb = load_table(spark, sf_dir, "embeddings")
     return pca_power_projection(emb).orderBy("vec_id")
 

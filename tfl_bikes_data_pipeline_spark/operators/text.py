@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..scope import retain
 from ..tables import load_table
 
 #: marker stopwords per language — deterministic tie order en>es>de>fr.
@@ -149,12 +150,10 @@ def tfidf_top_terms(documents: DataFrame, k: int = TFIDF_TOP_K) -> DataFrame:
     same relation the join probes — then a per-doc top-k window: the
     standard distributed TF-IDF, linear in corpus size.
     """
-    from .dedup import _retain
-
     words = documents.select(
         "doc_id", F.explode(F.expr(_words())).alias("term")
     )
-    tf = _retain(words.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf")))
+    tf = retain(words.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf")))
     df_rel = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("doc_id").orderBy(
         F.desc(F.col("tf").cast("double") / F.col("df")), F.asc("df"), F.asc("term")
@@ -417,9 +416,7 @@ def bigram_quality(documents: DataFrame) -> DataFrame:
     bigram stream is retained: the frequency aggregate reads the same
     relation the join probes (without the cache the corpus would be
     re-scanned and re-exploded twice)."""
-    from .dedup import _retain
-
-    rel = _retain(bigram_rel(documents))
+    rel = retain(bigram_rel(documents))
     freqs = rel.groupBy("bigram").agg(F.count(F.lit(1)).alias("freq"))
     return (
         rel.join(freqs, "bigram")
@@ -732,9 +729,10 @@ def boilerplate_shingles(documents: DataFrame, top_n: int = BOILERPLATE_TOP_N) -
     (TakeOrderedAndProject). The 1-row total-docs count rides in via a
     broadcast cross join, never a driver round-trip.
     """
-    from .dedup import _ensure_scan_parallelism, shingle_sets
+    from ..tables import ensure_scan_parallelism
+    from .dedup import shingle_sets
 
-    documents = _ensure_scan_parallelism(
+    documents = ensure_scan_parallelism(
         documents, documents.sparkSession
     )
     n_docs = documents.select(
@@ -902,9 +900,7 @@ def unigram_logprob(documents: DataFrame) -> DataFrame:
     aggregate. Total: two aggregates + one broadcast join, all linear.
     The token stream is retained — the model aggregate reads the same
     exploded relation the scoring join probes."""
-    from .dedup import _retain
-
-    tokens = _retain(
+    tokens = retain(
         documents.select(
             "doc_id",
             F.explode(F.split(F.lower(F.trim(F.col("text"))), " ")).alias("word"),
@@ -975,9 +971,7 @@ def min_k_prob(documents: DataFrame, k_pct: int = MINK_PCT) -> DataFrame:
     broadcast join onto the token stream, one per-document window
     (per-doc cardinality = document length, bounded by construction —
     no skew hazard), one per-doc aggregate."""
-    from .dedup import _retain
-
-    tokens = _retain(
+    tokens = retain(
         documents.select(
             "doc_id",
             F.explode(F.split(F.lower(F.trim(F.col("text"))), " ")).alias("word"),
@@ -1119,9 +1113,6 @@ def textrank(
     vocabulary word) is orders of magnitude smaller than the corpus;
     at web scale you'd partition both relations by the same key so
     rounds reuse the partitioning."""
-    from .dedup import _retain, release_cached_relations
-
-    release_cached_relations()
     # retain the JOINED (edges ⨝ out-weight) relation, not raw edges:
     # every power-iteration round reads `e`, and with only `edges`
     # cached the out-weight aggregate + join re-executed per round
@@ -1129,10 +1120,10 @@ def textrank(
     # with this shape). `nodes` derives from `e` — the inner join on
     # src preserves every src (outw is keyed by src, built from edges)
     # — and the n_nodes count doubles as the cache pre-materialization
-    # the iterative-consumer discipline requires (dedup._retain note).
+    # an iterative consumer needs (scope.retain).
     edges = cooccurrence_edges(documents)
     outw = edges.groupBy("src").agg(F.sum("weight").alias("outw"))
-    e = _retain(edges.join(outw, "src"))
+    e = retain(edges.join(outw, "src"))
     nodes = e.select(F.col("src").alias("word")).distinct()
     n_nodes = nodes.count()
     if n_nodes == 0:
@@ -1159,10 +1150,6 @@ def textrank(
                 F.lit(base) + F.sum("c").cast("string").cast("double"), 12
             ).alias("r")
         )
-    # e stays persisted until the NEXT _retain-using invocation
-    # (dedup.release_cached_relations lifecycle): the returned plan is
-    # lazy, so unpersisting here would recompute the co-occurrence +
-    # out-weight join for every iteration.
     return (
         ranks.select("word", F.round("r", 6).alias("rank"))
         .orderBy(F.desc("rank"), F.asc("word"))
@@ -1912,9 +1899,9 @@ def q_phrase_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     them anywhere in the corpus — each phrase hits at least its own
     source doc, and the tiny shared vocabulary makes cross-doc exact
     collisions a real (verified) phenomenon rather than a zero row."""
-    from .dedup import _ensure_scan_parallelism
+    from ..tables import ensure_scan_parallelism
 
-    documents = _ensure_scan_parallelism(
+    documents = ensure_scan_parallelism(
         load_table(spark, sf_dir, "documents"), spark
     )
     phrases = (

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..scope import retain
 from ..tables import load_table
 
 #: hex-string thresholds on the first 2 md5 chars (256 buckets):
@@ -562,7 +563,6 @@ def curate_corpus(documents: DataFrame) -> DataFrame:
     how production curation pipelines sequence."""
     from .dedup import (
         JACCARD_THRESHOLD,
-        _retain,
         lsh_candidate_pairs,
         minhash_signatures,
         shingle_sets,
@@ -580,11 +580,7 @@ def curate_corpus(documents: DataFrame) -> DataFrame:
         .select("doc_id")
     )
     kept = documents.join(exact_keep, "doc_id")
-    # composable operator: _retain joins the CURRENT cache generation —
-    # releasing here would unpersist relations a caller's upstream plan
-    # may still read (the lifecycle contract: release only at the start
-    # of a TOP-LEVEL query over fresh scans — q_curation_pipeline does).
-    sets = _retain(shingle_sets(kept))
+    sets = retain(shingle_sets(kept))
     pairs = verify_candidates(
         sets, lsh_candidate_pairs(minhash_signatures(sets)), JACCARD_THRESHOLD
     )
@@ -597,9 +593,6 @@ def curate_corpus(documents: DataFrame) -> DataFrame:
 
 
 def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import release_cached_relations
-
-    release_cached_relations()  # top-level query over fresh scans
     documents = load_table(spark, sf_dir, "documents")
     return curate_corpus(documents).orderBy("doc_id")
 
@@ -744,12 +737,11 @@ def select_within_token_budget(spark, documents: DataFrame) -> DataFrame:
     where the range boundaries land (the prefix over a total order
     does not depend on its partitioning), so the range sampler's
     boundary choice cannot perturb the output; the windowed relation is
-    persisted (dedup [[_retain]] lifecycle) so the offsets action and
-    the returned plan read ONE materialization of the shuffle.
+    retained so the offsets action and the returned plan read ONE
+    materialization of the shuffle.
 
     Ordering is all-integer — band rank, word count, doc id — so no
     float comparison can diverge between engines."""
-    from .dedup import _retain
     from .text import quality_features
 
     feats = quality_features(documents).select(
@@ -773,7 +765,7 @@ def select_within_token_budget(spark, documents: DataFrame) -> DataFrame:
         .orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    slim = _retain(
+    slim = retain(
         ranked.select(
             "doc_id",
             "quality_band",
@@ -807,13 +799,6 @@ def select_within_token_budget(spark, documents: DataFrame) -> DataFrame:
 
 
 def q_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import release_cached_relations
-
-    # top-level query over fresh scans: free the previous generation's
-    # retained relations BEFORE _retain pins this invocation's windowed
-    # relation — otherwise back-to-back runs (the bench protocol)
-    # accumulate one documents-scale materialization each.
-    release_cached_relations()
     documents = load_table(spark, sf_dir, "documents")
     return select_within_token_budget(spark, documents)
 
@@ -996,11 +981,8 @@ def dsir_select(documents: DataFrame, keep_n: int = DSIR_KEEP_N) -> DataFrame:
     corpus-sized sort, no window over the whole corpus. The token
     stream is retained (it feeds both model aggregates and the scoring
     join)."""
-    from .dedup import _retain, release_cached_relations
-
-    release_cached_relations()
     bucket = _dsir_bucket("word", "spark")
-    tokens = _retain(
+    tokens = retain(
         documents.select(
             "doc_id",
             "source",

@@ -413,17 +413,7 @@ def q_quantiles_scaleout(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-null values, matching aggregate null semantics). ceil(p·N) is
     a single correctly-rounded double multiply on both engines —
     deterministic, unlike summed-float thresholds (review r11,
-    q_mixture_temperature postmortem).
-
-    Memory footprint (ADVICE r11): the rank recipe persists a
-    MEMORY_AND_DISK sorted copy of the (projected) events relation for
-    the returned frame's lifetime; the handle is deliberately NOT
-    released here because the frame is returned LAZY — releasing
-    before the caller's action would just re-run the range exchange
-    inside that action, silently defeating the persist. Accumulation
-    is bounded at ``functions/ranks._MAX_LIVE`` (4) by eviction, and
-    sweep harnesses release between queries (``bench.py``) once the
-    frame has been consumed."""
+    q_mixture_temperature postmortem)."""
     from ..functions.ranks import _totals_expr, ranked_by_group
 
     events = (
@@ -431,7 +421,7 @@ def q_quantiles_scaleout(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_type", "value", "event_id")
         .where(F.col("value").isNotNull())
     )
-    ranked, totals, _resources = ranked_by_group(
+    ranked, totals = ranked_by_group(
         events, "event_type", ["value", "event_id"]
     )
     n = _totals_expr("event_type", totals)

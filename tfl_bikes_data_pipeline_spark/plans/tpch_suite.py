@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import exact_row_avg, exact_sum, exact_sum_col
+from ..scope import retain
 from ..tables import load_table
 
 QUERIES: dict = {}
@@ -675,19 +676,15 @@ _Q21_NATION = "NATION_7"
 
 
 def q_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _retain, release_cached_relations
-
     # li is the heaviest subplan (the fact join) and feeds THREE
-    # readers (l1, other, other_late); without _retain it would execute
+    # readers (l1, other, other_late); without retain it would execute
     # three times per run (ReusedExchange shares child shuffles, never
-    # the join itself). Top-level query over fresh scans → release the
-    # previous cache generation first (the covariance/graph pattern).
-    release_cached_relations()
+    # the join itself).
     nation = load_table(spark, sf_dir, "nation")
     supplier = load_table(spark, sf_dir, "supplier")
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
-    li = _retain(
+    li = retain(
         lineitem.join(
             orders.where(F.col("o_orderstatus") == "F"),
             F.col("l_orderkey") == F.col("o_orderkey"),

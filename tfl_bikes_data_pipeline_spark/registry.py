@@ -8,10 +8,14 @@ from here. Each entry: name → callable(spark, sf_dir) -> DataFrame, and
 from __future__ import annotations
 
 import functools
+import json
+import re
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import scope
 from .session import ensure_runtime_confs
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -41,10 +45,13 @@ def _self_sufficient(fn: QueryFn) -> QueryFn:
     """Wrap a query so it works on ANY live session, including the plain
     (no builder confs) SparkSession the driver's correctness harness builds.
     Applies the runtime SQL confs (nanos-parquet read, UTC TZ, AQE, ...)
-    before the query declares its plan."""
+    before the query declares its plan, after releasing what the
+    previous query kept (``scope.release``), so sequential harnesses hold
+    at most one query's persisted state."""
 
     @functools.wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
+        scope.release()
         ensure_runtime_confs(spark)
         return fn(spark, sf_dir)
 
@@ -126,52 +133,67 @@ _load_all()
 BENCH_QUERIES[:] = list(dict.fromkeys([*BENCH_QUERIES, *QUERIES]))
 
 
-#: Registry HEAD — the external hash check of ``queries()`` pins its
-#: FIRST ~50 entries each round: never-checked hash-oracled queries
-#: first, then every remaining query ordered by the round of its most
-#: recent green CORRECTNESS row, oldest first (ties keep registry
-#: order). This tuple is the verbatim output of ``python
-#: tools/gen_head.py`` over the committed CORRECTNESS_r*.json artifacts;
-#: tests/test_registry_contract.py asserts the match, so a stale paste
-#: fails CI. Every name here carries a full hash oracle (bound-oracled
-#: sketches are excluded by construction).
-REGISTRY_HEAD: tuple[str, ...] = (
-    # 1) last green r10: the training/curation, graph and layout tail
-    "q_training_examples", "q_curation_pipeline", "q_source_caps",
-    "q_budget_select", "q_adaptive_filter", "q_graph_degrees",
-    "q_graph_triangles", "q_zorder_layout",
-    # 2) last green r11: analyst, retrieval, text, multimodal, sources,
-    #    sketch and skew queries, in registration order
-    "q_topk_count", "q_topk_join_count", "q_filter_hour_topk",
-    "q_group_by_hour", "q_moving_avg", "q_case_bucket_count",
-    "q_bucket_by_location", "q_join_cte_inner", "q_star_view",
-    "q_quantiles_scaleout", "q_dedup_hyperplane_lsh", "q_knn_classify_ivf",
-    "q_embed_pca_project", "q_token_count", "q_pii_scrub",
-    "q_text_bigram_quality", "q_text_repetition", "q_text_chunks",
-    "q_corpus_report", "q_text_boilerplate", "q_textrank_keywords",
-    "q_bpe_merges", "q_vocab_growth", "q_ahash_bucket_profile",
-    "q_image_stats", "q_audio_stats", "q_image_resize", "q_audio_resample",
-    "q_media_decode_quarantine", "q_cms_join_estimate", "q_sessionize",
-    "q_split_leakproof", "q_mixture_temperature", "q_csv_roundtrip",
-    "q_orc_roundtrip", "q_json_roundtrip", "q_spatial_nearest",
-    "q_netcdf_weather", "q_xlsx_roundtrip", "q_xml_stations",
-    "q_skew_salted_join", "q_stream_tumbling_warehouse",
-)
+#: Slots the external hash check of ``queries()`` pins each round.
+HEAD_SIZE = 50
+
+_REPO = Path(__file__).resolve().parent.parent
 
 
-def _rotate_head() -> None:
-    missing = [n for n in REGISTRY_HEAD if n not in QUERIES]
-    assert not missing, f"REGISTRY_HEAD names not registered: {missing}"
-    unoracled = [n for n in REGISTRY_HEAD if n not in ORACLES]
-    assert not unoracled, f"REGISTRY_HEAD names without hash oracles: {unoracled}"
-    head = set(REGISTRY_HEAD)
-    reordered = {n: QUERIES[n] for n in REGISTRY_HEAD}
-    reordered.update({n: fn for n, fn in QUERIES.items() if n not in head})
-    QUERIES.clear()
-    QUERIES.update(reordered)
+def _correctness_artifacts(repo: Path) -> list[tuple[int, Path]]:
+    """(round, path) of every CORRECTNESS_r{N}.json in ``repo``, oldest
+    first. A stray name that matches the glob but not the round pattern
+    (CORRECTNESS_rerun.json) is skipped, not a crash at import."""
+    numbered = [
+        (int(m.group(1)), p)
+        for p in repo.glob("CORRECTNESS_r*.json")
+        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name))
+    ]
+    return sorted(numbered)
 
 
-_rotate_head()
+def _read_artifact(path: Path) -> dict:
+    try:
+        return json.loads(path.read_text())
+    except (OSError, ValueError):
+        return {}
+
+
+def last_green_rounds(repo: Path) -> dict[str, int]:
+    """query -> round of its most recent green row in ``repo``'s
+    CORRECTNESS artifacts."""
+    last: dict[str, int] = {}
+    for rnd, path in _correctness_artifacts(repo):
+        for name, row in _read_artifact(path).items():
+            if (
+                isinstance(row, dict)
+                and row.get("rows_match")
+                and row.get("schema_match", True)
+                and row.get("hash_match", True)
+                and not row.get("err")
+            ):
+                last[name] = rnd
+    return last
+
+
+def ordering(repo: Path) -> list[str]:
+    """Hash-oracled queries by staleness: never driver-checked first,
+    then by the round of their last green row, oldest first; ties keep
+    registry order. Bound-oracled queries are left out: the driver's
+    hash compare cannot check them."""
+    last = last_green_rounds(repo)
+    hash_oracled = [q for q in QUERIES if q in ORACLES]
+    never = [q for q in hash_oracled if q not in last]
+    return never + sorted((q for q in hash_oracled if q in last), key=last.__getitem__)
+
+
+#: Registry HEAD: the first :data:`HEAD_SIZE` names of :func:`ordering`
+#: over the committed artifacts, moved to the front of ``QUERIES`` so
+#: the driver's pinned slots go to the stalest queries.
+REGISTRY_HEAD: tuple[str, ...] = tuple(ordering(_REPO)[:HEAD_SIZE])
+_reordered = {n: QUERIES[n] for n in REGISTRY_HEAD}
+_reordered.update(QUERIES)
+QUERIES.clear()
+QUERIES.update(_reordered)
 
 
 #: Fallback driver-pinned set (as observed in CORRECTNESS_r04.json).
@@ -202,25 +224,8 @@ _DRIVER_PINNED_R4: frozenset[str] = frozenset({
 def _driver_pinned_from_artifacts() -> tuple[frozenset[str], str | None]:
     """(pinned set, artifact filename) from the newest
     CORRECTNESS_r{N}.json, or (r4 fallback, None) without artifacts."""
-    import json
-    import re
-    from pathlib import Path
-
-    repo = Path(__file__).resolve().parent.parent
-    # fullmatch-filter before sorting: a stray CORRECTNESS_rerun.json
-    # would match the glob but not the round pattern, and must not
-    # crash package import.
-    numbered = [
-        (int(m.group(1)), p)
-        for p in repo.glob("CORRECTNESS_r*.json")
-        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name))
-    ]
-    arts = [p for _, p in sorted(numbered)]
-    for art in reversed(arts):
-        try:
-            names = frozenset(json.loads(art.read_text()))
-        except (OSError, ValueError):
-            continue
+    for _, art in reversed(_correctness_artifacts(_REPO)):
+        names = frozenset(_read_artifact(art))
         if names:
             return names, art.name
     return _DRIVER_PINNED_R4, None

@@ -132,21 +132,6 @@ def get_spark(
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # reference disables partition-column type inference
-        # (transform_load.py:525); we keep partition values as strings.
-        .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-        # idempotent month re-runs overwrite only the months present in
-        # the incoming frame (reference append/overwrite flip at :438,:496)
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # parquet TIMESTAMP(NANOS) (the events fixture) is otherwise
-        # unreadable; read as long and convert in the loader
-        # (tables.load_table) — stays distributed, no driver round-trip.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         # local mode executes in the driver JVM: size the heap to the work
         # (92-query bench sessions GC-thrash at 8g — measured ~10% tail
@@ -154,9 +139,8 @@ def get_spark(
         # spark-submit and executors carry the heap instead.)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    for k, v in {**RUNTIME_SQL_CONFS, **(extra_conf or {})}.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..plans.pipelines import TS_FMT, build_fact
+from ..scope import retain
 from ..tables import load_table
 from ..tmputil import sweep_tmpdir
 
@@ -235,19 +236,15 @@ def read_csv_quarantine(
 def split_quarantine(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(clean, dead_letter) from a quarantine read. The corrupt-record
     column is dropped from the clean side; the dead-letter side keeps
-    the raw line verbatim."""
+    the raw line verbatim. The parsed frame is held by the query scope:
+    evaluate the dead-letter side before the scope is next released,
+    or Spark refuses its plan."""
     # the cache is REQUIRED, not an optimization: Spark refuses plans
     # that reference ONLY the corrupt-record column of a raw CSV/JSON
     # scan (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN — the
     # dead-letter side is exactly that shape); caching the parsed frame
-    # is the documented workaround. Lifecycle: MEMORY_AND_DISK blocks
-    # spill rather than OOM and evict LRU; a caller working through
-    # many feeds in one session should spark.catalog.clearCache()
-    # between feeds — there is no narrower release handle for a
-    # function returning two children of the cached parse.
-    from pyspark import StorageLevel
-
-    raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
+    # is the documented workaround.
+    raw = retain(raw)
     clean = raw.where(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
     dead = raw.where(F.col("_corrupt_record").isNotNull()).select(
         F.col("_corrupt_record").alias("raw_line")

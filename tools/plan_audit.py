@@ -48,7 +48,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tfl_bikes_data_pipeline_spark import registry
+from tfl_bikes_data_pipeline_spark import registry, scope
 from tfl_bikes_data_pipeline_spark.session import get_spark
 
 #: streaming queries return already-materialized memory-sink relations;
@@ -332,8 +332,6 @@ def main() -> None:
     args = ap.parse_args()
 
     spark = get_spark(app_name="plan_audit")
-    from tfl_bikes_data_pipeline_spark.functions.ranks import release_rank_relations
-
     from tfl_bikes_data_pipeline_spark.streaming import jobs as streaming_jobs
 
     rows = []
@@ -393,7 +391,7 @@ def main() -> None:
                 "exec_s": None,
                 "streaming": False,
             })
-        release_rank_relations()
+        scope.release()
 
     rows.sort(key=lambda r: (-r["exchanges"], r["name"]))
     executed = not args.no_execute

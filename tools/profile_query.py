@@ -48,7 +48,7 @@ def rest(path):
         return json.load(r)
 
 fn = registry.QUERIES[name]
-from tfl_bikes_data_pipeline_spark.functions.ranks import release_rank_relations
+from tfl_bikes_data_pipeline_spark import scope
 
 # cold: build once, execute once (includes codegen)
 t0 = time.perf_counter()
@@ -57,7 +57,7 @@ build_cold = time.perf_counter() - t0
 t0 = time.perf_counter()
 df.write.format("noop").mode("overwrite").save()
 exec_cold = time.perf_counter() - t0
-release_rank_relations()
+scope.release()
 
 # steady: rebuild plan (what bench.py times), separating build from exec.
 # THREE steady reps, report the median — single readings on this host
@@ -73,7 +73,7 @@ for rep in range(3):
     t0 = time.perf_counter()
     df2.write.format("noop").mode("overwrite").save()
     execs.append(time.perf_counter() - t0)
-    release_rank_relations()
+    scope.release()
 build_steady = sorted(builds)[1]
 exec_steady = sorted(execs)[1]
 
